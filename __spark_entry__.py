@@ -258,44 +258,54 @@ def _dedup_jaccard_words(spark, sf):
 # The minhash pair stage is the expensive shared prefix of three queries
 # (pairs themselves, clusters, curated corpus) — the production composition
 # computes it ONCE and feeds all three consumers (dedup_clusters(pairs=…) /
-# drop_near_dups(clusters=…)).  The driver runs each query separately, so a
-# per-(session, sf_dir) memo of the persisted pair frame recreates that
-# composition across the three calls; entries are tiny (a persisted pair
-# DataFrame handle) and keyed by the session so a stopped session's entry is
-# never reused.
-_PAIRS_MEMO: dict = {}
+# drop_near_dups(clusters=…)); likewise the simhash signature feeds
+# dedup_simhash and simhash_banding_complete.  Each query runs separately,
+# so a memo keyed by (kind, session, sf_dir) recreates those compositions
+# across calls.  Entries are tiny (a persisted DataFrame
+# handle), keyed by applicationId, not id(spark): CPython reuses object ids
+# after GC, which could silently serve a dead session's frame.  A new key
+# evicts only other sessions' entries, so alternating sf dirs in one session
+# reuse their frames instead of recomputing on every call.
+_MEMO: dict = {}
+
+
+def _unpersist(frame) -> None:
+    try:
+        frame.unpersist()
+    except Exception:  # noqa: BLE001 — session already stopped
+        pass
+
+
+def _memo(kind, spark, sf, build):
+    app = spark.sparkContext.applicationId
+    key = (kind, app, sf)
+    if key not in _MEMO:
+        for stale in [k for k in _MEMO if k[1] != app]:
+            _unpersist(_MEMO.pop(stale))
+        _MEMO[key] = build()
+    return _MEMO[key]
 
 
 def reset_memos() -> None:
     """Drop (and unpersist) the cross-query memoized frames — bench harness
     hook so a repeat timing of the memo-backed dedup family pays the FULL
     pipeline again instead of replaying a cache."""
-    for memo in (_PAIRS_MEMO, _CLUSTERS_MEMO, _SIG_MEMO):
-        for frame in memo.values():
-            try:
-                frame.unpersist()
-            except Exception:  # noqa: BLE001 — session already stopped
-                pass
-        memo.clear()
+    for frame in _MEMO.values():
+        _unpersist(frame)
+    _MEMO.clear()
 
 
 def _shared_pairs(spark, sf):
-    # keyed by applicationId, not id(spark): CPython reuses object ids after
-    # GC, which could silently serve a dead session's frame (r4 ADVICE)
-    key = (spark.sparkContext.applicationId, sf, 32, 16, 0.5)
-    if key not in _PAIRS_MEMO:
-        from govuk_crawler_worker_spark.operators.dedup import minhash_lsh_pairs
+    from govuk_crawler_worker_spark.operators.dedup import minhash_lsh_pairs
 
-        for stale in _PAIRS_MEMO.values():  # one sf_dir at a time — don't
-            try:  # pin stale caches in executor memory
-                stale.unpersist()
-            except Exception:  # noqa: BLE001 — session already stopped
-                pass
-        _PAIRS_MEMO.clear()
-        _PAIRS_MEMO[key] = minhash_lsh_pairs(
+    return _memo(
+        "pairs",
+        spark,
+        sf,
+        lambda: minhash_lsh_pairs(
             _t(spark, sf, "documents"), num_perm=32, bands=16, jaccard_threshold=0.5
-        ).persist()
-    return _PAIRS_MEMO[key]
+        ).persist(),
+    )
 
 
 def _dedup_minhash_lsh(spark, sf):
@@ -307,9 +317,6 @@ def _dedup_minhash_lsh(spark, sf):
     return _shared_pairs(spark, sf)
 
 
-_CLUSTERS_MEMO: dict = {}
-
-
 def _dedup_clusters(spark, sf):
     """Near-dup pairs → duplicate CLUSTERS (connected components via
     alternating large-star/small-star contraction; keeper = min doc_id).
@@ -318,15 +325,16 @@ def _dedup_clusters(spark, sf):
     components with a recursive CTE.  Memoized like the pair stage —
     drop_near_dups composes on the SAME clusters frame instead of re-running
     the contraction rounds."""
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _CLUSTERS_MEMO:
-        from govuk_crawler_worker_spark.operators.dedup import dedup_clusters
+    from govuk_crawler_worker_spark.operators.dedup import dedup_clusters
 
-        _CLUSTERS_MEMO.clear()
-        _CLUSTERS_MEMO[key] = dedup_clusters(
+    return _memo(
+        "clusters",
+        spark,
+        sf,
+        lambda: dedup_clusters(
             _t(spark, sf, "documents"), pairs=_shared_pairs(spark, sf)
-        ).localCheckpoint(eager=False)
-    return _CLUSTERS_MEMO[key]
+        ).localCheckpoint(eager=False),
+    )
 
 
 def _drop_near_dups(spark, sf):
@@ -340,28 +348,17 @@ def _drop_near_dups(spark, sf):
     ).select("doc_id", "source")
 
 
-_SIG_MEMO: dict = {}
-
-
 def _shared_simhash_sig(spark, sf):
-    """Per-(session, sf_dir) memo of the persisted simhash64 signature table
-    — the SAME production composition the pairs/clusters memo models: the
-    signature pass is the shared prefix of ``dedup_simhash`` (pairs) and
+    """The memoized persisted simhash64 signature table: the signature pass
+    is the shared prefix of ``dedup_simhash`` (pairs) and
     ``simhash_banding_complete`` (completeness audit), computed once and fed
     to both.  ``reset_memos()`` drops it, so a bench rerun pays the full
     Arrow pass again (r8)."""
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _SIG_MEMO:
-        from govuk_crawler_worker_spark.operators.dedup import simhash64
+    from govuk_crawler_worker_spark.operators.dedup import simhash64
 
-        for stale in _SIG_MEMO.values():
-            try:
-                stale.unpersist()
-            except Exception:  # noqa: BLE001 — session already stopped
-                pass
-        _SIG_MEMO.clear()
-        _SIG_MEMO[key] = simhash64(_t(spark, sf, "documents")).persist()
-    return _SIG_MEMO[key]
+    return _memo(
+        "sig", spark, sf, lambda: simhash64(_t(spark, sf, "documents")).persist()
+    )
 
 
 def _dedup_simhash(spark, sf):
@@ -625,7 +622,7 @@ def _simhash_banding_complete(spark, sf):
     )
     n_missed = exact.join(cand, ["a", "b"], "left_anti").count()
     # sig is the memoized shared signature (r8) — its lifecycle belongs to
-    # _SIG_MEMO / reset_memos, not this query
+    # _memo / reset_memos, not this query
     return spark.createDataFrame(
         [(int(n_missed), n_missed == 0)],
         "n_missed long, banding_complete boolean",

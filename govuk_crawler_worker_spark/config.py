@@ -62,9 +62,6 @@ class CrawlConfig:
     # politeness groupBy (salted applyInPandas buckets).
     host_salt_buckets: int = 8
 
-    # Shuffle sizing for the local harness; on a real cluster set via conf.
-    shuffle_partitions: int = 32
-
     def __post_init__(self):
         # the reference panics on a non-positive thread count
         # (workflow.go NewCrawlerWorkflow guard, workflow_test.go:235-245);

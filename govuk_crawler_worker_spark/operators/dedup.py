@@ -157,62 +157,6 @@ def jaccard_word_pairs(
 # ---------------------------------------------------------------------------
 
 
-def shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, shingle) rows: word n-grams, distinct per doc — all JVM-side
-    (split + transform over sequence + explode; no Python)."""
-    # docs shorter than n words yield NO shingles.  The guard is load-bearing
-    # under ANSI mode (Spark 4 default): sequence(0, -1) DESCENDS to [0, -1]
-    # rather than producing an empty array, and the slice/index then throws
-    # INVALID_ARRAY_INDEX — one short document would abort the whole job.
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), " ").alias("w"),
-    ).select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size(w) >= {n} THEN "
-                    f"transform(sequence(0, size(w)-{n}), "
-                    f"i -> concat_ws(' ', slice(w, i+1, {n}))) "
-                    f"ELSE cast(array() as array<string>) END"
-                )
-            )
-        ).alias("shingle"),
-    )
-
-
-def shingle_hashes(
-    docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, h) rows: 64-bit hashes of word n-grams, distinct per doc —
-    the hot-path form of :func:`shingles`.  Words are hashed ONCE per doc
-    and each shingle hash combines the n word hashes (``xxhash64(wh[i..i+n])``)
-    instead of allocating a concatenated string per shingle — measured ~3×
-    faster on the sandbox; the hash family differs from
-    ``xxhash64(shingle_string)`` but any consistent 64-bit family is
-    equivalent for the df-cap / banding / set-verify pipeline (per-pair
-    collision odds ~1e-15)."""
-    idx = ", ".join(f"wh[i+{j}]" for j in range(n))
-    # short-doc guard: same ANSI-mode hazard as shingles() — sequence(0, -1)
-    # descends instead of emptying, and wh[i+j] then indexes out of range
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.expr(f"transform(split({text_col}, ' '), x -> xxhash64(x))").alias("wh"),
-    ).select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size(wh) >= {n} THEN "
-                    f"transform(sequence(0, size(wh)-{n}), i -> xxhash64({idx})) "
-                    f"ELSE cast(array() as array<bigint>) END"
-                )
-            )
-        ).alias("h"),
-    )
-
-
 def _splitmix_mix(z: "np.ndarray") -> "np.ndarray":
     """splitmix64 finalizer over uint64 (Steele/Lea/Flood constants)."""
     z = (z + np.uint64(0x9E3779B97F4A7C15)).astype(np.uint64)
@@ -294,14 +238,14 @@ def shingle_hash_sets_arrow(
     docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc_id, hs) — each doc's distinct shingle-hash set computed in ONE
-    Arrow pass straight from the text (r8): replaces the JVM higher-order
-    hash chain + explode + collect_list shuffle of the shingle_hashes →
-    shingle_hash_sets composition, whose interpreted per-element lambdas
-    dominated the minhash CPU profile (~50 CPU·s at sf1.0 vs ~5 for this
-    pass).  The hash family differs from the JVM path but any consistent
-    injective-in-practice 64-bit family yields the identical verified pair
-    set and jaccard values (per-pair collision odds ~1e-15; banding recall
-    at the data's jaccard floor is family-independent)."""
+    Arrow pass straight from the text (r8): replaces a JVM higher-order
+    hash chain + explode + collect_list shuffle composition, whose
+    interpreted per-element lambdas dominated the minhash CPU profile
+    (~50 CPU·s at sf1.0 vs ~5 for this pass).  The hash family differs
+    from the JVM path but any consistent injective-in-practice 64-bit
+    family yields the identical verified pair set and jaccard values
+    (per-pair collision odds ~1e-15; banding recall at the data's jaccard
+    floor is family-independent)."""
 
     @F.pandas_udf("array<long>")
     def sets(texts: pd.Series) -> pd.Series:
@@ -310,43 +254,7 @@ def shingle_hash_sets_arrow(
     return docs.select(F.col(id_col).alias("doc_id"), sets(F.col(text_col)).alias("hs"))
 
 
-def minhash_signatures(sh: DataFrame, num_perm: int = 32) -> DataFrame:
-    """num_perm MinHash values per doc in ONE aggregation pass: perm_j(s) =
-    xxhash64(j || s) (JVM xxhash64, vectorized), signature_j = min over
-    shingles.  No Python in the loop."""
-    aggs = [
-        F.min(F.xxhash64(F.concat(F.lit(f"{j}|"), F.col("shingle")))).alias(f"mh{j}")
-        for j in range(num_perm)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def _splitmix_perms(h: "np.ndarray", num_perm: int) -> "np.ndarray":
-    """(T, num_perm) permutation hashes from one base hash per shingle —
-    splitmix64 finalizer over h + j·GOLDEN (a standard universal family;
-    the same mixer the bloom probes use)."""
-    j = np.arange(1, num_perm + 1, dtype=np.uint64)
-    z = h[:, None] + j[None, :] * np.uint64(0x9E3779B97F4A7C15)
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return z ^ (z >> np.uint64(31))
-
-
-def shingle_hash_sets(sh: DataFrame) -> DataFrame:
-    """(doc_id, hs: array<long>) — each doc's distinct-shingle xxhash64 set
-    in one aggregation.  Shared by band-key generation AND exact verify (the
-    verify works on hashes: a 64-bit collision inside one pair's ~10²-10³
-    shingles is ~1e-15 — far below every other error source)."""
-    return (
-        sh.withColumn("h", F.xxhash64("shingle"))
-        .groupBy("doc_id")
-        .agg(F.collect_list("h").alias("hs"))
-    )
-
-
-def band_keys_from_grouped(
-    grouped: DataFrame, num_perm: int, bands: int, chunk: int = 1024
-) -> DataFrame:
+def band_keys_from_grouped(grouped: DataFrame, num_perm: int, bands: int) -> DataFrame:
     """(doc_id, band, bh) LSH band keys computed in ONE Arrow pass over the
     pre-grouped shingle-hash sets: permutation hashes via splitmix remix,
     per-band minima via minimum.reduceat over the concatenated token stream,
@@ -367,7 +275,7 @@ def band_keys_from_grouped(
         # corpus shingles repeat heavily across docs, and the columnar
         # sweep never materializes the (tokens × num_perm) matrix the
         # chunked variant allocated (measured 4x on a 50k-doc batch; the
-        # permutation values are identical, see _splitmix_perms)
+        # permutation j is the splitmix64 finalizer over h + j·GOLDEN)
         cat = np.concatenate([a for a in arrs if len(a)]).astype(np.uint64)
         uniq, inv = np.unique(cat, return_inverse=True)
         starts = np.concatenate([[0], np.cumsum(lens[nz])[:-1]])
@@ -400,13 +308,6 @@ def band_keys_from_grouped(
     )
 
 
-def minhash_band_keys(
-    sh: DataFrame, num_perm: int, bands: int, chunk: int = 1024
-) -> DataFrame:
-    """(doc_id, band, bh) band keys straight from (doc_id, shingle) rows."""
-    return band_keys_from_grouped(shingle_hash_sets(sh), num_perm, bands, chunk)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     num_perm: int = 32,
@@ -426,10 +327,10 @@ def minhash_lsh_pairs(
     ``max_shingle_df`` drops stop-shingles (document frequency cap) so one
     viral phrase cannot create a quadratic candidate blowup at 100 TB."""
     rows_per_band = num_perm // bands
-    # Shingles enter as 64-bit HASHES (word hashes combined — see
-    # shingle_hashes; ~3× cheaper than allocating a string per shingle):
-    # everything downstream (the stop-shingle document-frequency cap, the
-    # per-doc set aggregation, the exact verify) operates on 8-byte longs
+    # Shingles enter as 64-bit HASHES (word hashes combined; ~3× cheaper
+    # than allocating a string per shingle): everything downstream (the
+    # stop-shingle document-frequency cap, the per-doc set aggregation, the
+    # exact verify) operates on 8-byte longs
     # instead of ~25-byte strings.  A 64-bit collision inside the cap/verify
     # is ~1e-15 per pair — far below every other error source.
     # ONE Arrow pass from text straight to per-doc distinct shingle-hash

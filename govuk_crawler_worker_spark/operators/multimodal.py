@@ -127,8 +127,3 @@ def frame_sample(video: DataFrame, every_n: int = 30) -> DataFrame:
             )
 
     return video.select("video_id", "bytes").mapInPandas(sample, FRAME_SCHEMA)
-
-
-def frame_sample_stub(video: DataFrame, every_n: int = 30) -> DataFrame:
-    """Backward-compat alias for the round-1 stub name."""
-    return frame_sample(video, every_n)

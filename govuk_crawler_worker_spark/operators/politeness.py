@@ -89,13 +89,6 @@ def robots_disallowed_col(config, url_col: str = "url", host_col: str = "host"):
     return disallowed
 
 
-def robots_filter(df: DataFrame, config, url_col: str = "url") -> DataFrame:
-    """Drop URLs disallowed by per-host robots rules (columnar)."""
-    if not config.robots_disallow:
-        return df
-    return df.where(~robots_disallowed_col(config, url_col))
-
-
 def robots_disallowed_py(config, url: str, host: str) -> bool:
     """Pure-Python twin of ``robots_disallowed_col`` for the simulator."""
     prefixes = config.robots_disallow.get(host)
@@ -108,53 +101,3 @@ def robots_disallowed_py(config, url: str, host: str) -> bool:
     except ValueError:
         return False
     return any(path.startswith(p) for p in prefixes)
-
-
-def parse_robots_txt(text: str, user_agent: str = "*") -> tuple[str, ...]:
-    """Minimal robots.txt parser → Disallow path prefixes for an agent.
-
-    Standard grammar subset: ``User-agent`` groups (consecutive UA lines
-    share one group), ``Disallow`` path prefixes, ``#`` comments; the most
-    specific matching agent group wins (exact name > longest substring
-    match > ``*``); empty Disallow means allow-all.  Feed the result into
-    ``CrawlConfig.robots_disallow[host]``."""
-    groups: list[tuple[list[str], list[str]]] = []  # (agents, disallows)
-    agents: list[str] = []
-    disallows: list[str] = []
-    in_group_body = False
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        field, _, value = line.partition(":")
-        field, value = field.strip().lower(), value.strip()
-        if field == "user-agent":
-            if in_group_body:
-                groups.append((agents, disallows))
-                agents, disallows = [], []
-                in_group_body = False
-            agents.append(value.lower())
-        elif field == "disallow":
-            in_group_body = True
-            if value:
-                disallows.append(value)
-        elif field in ("allow", "crawl-delay", "sitemap"):
-            in_group_body = True  # body line: closes the UA run
-    if agents:
-        groups.append((agents, disallows))
-
-    ua = user_agent.lower()
-    best: tuple[int, list[str]] | None = None  # (specificity, disallows)
-    for agent_list, dis in groups:
-        for a in agent_list:
-            if a == ua:
-                spec = 1_000_000
-            elif a != "*" and a in ua:
-                spec = len(a)
-            elif a == "*":
-                spec = 0
-            else:
-                continue
-            if best is None or spec > best[0]:
-                best = (spec, dis)
-    return tuple(best[1]) if best else ()

@@ -1,4 +1,4 @@
-"""URL-seen membership: distributed Bloom filter + cuckoo fallback.
+"""URL-seen membership: segmented Bloom pre-filter + exact seen table.
 
 Replaces the reference's Redis TTL hash set (ttl_hash_set/ttl_hash_set.go:
 57-189, keys ``prefix:md5(url)`` :202-204) with, per the north rule:
@@ -9,14 +9,18 @@ Replaces the reference's Redis TTL hash set (ttl_hash_set/ttl_hash_set.go:
   pandas UDF, that cheaply drops the (vast at 10^10-URL scale) majority of
   already-seen outlink candidates BEFORE the exact anti-join — cutting the
   shuffle volume of the dedup join;
-* a **cuckoo filter** fallback supporting deletion, needed because the
-  ``Set(url, ReadyToEnqueue)`` reset on non-accepted content types
-  (workflow.go:136) removes membership — bloom cannot unlearn;
-* **exactness guaranteed by construction**: filters only PRE-filter.  Bloom
-  false positives would wrongly drop frontier candidates, so every candidate
-  surviving (or flagged by) the pre-filter is confirmed with an exact
-  left-anti join against the seen table.  The filters are pure bandwidth
-  optimizations; correctness never depends on them.
+* **exactness guaranteed by construction**: the filter only PRE-filters.
+  Bloom false positives would wrongly drop frontier candidates, so every
+  candidate flagged by the pre-filter is confirmed with an exact left-anti
+  join against the seen table.  The filter is a pure bandwidth
+  optimization; correctness never depends on it.
+* **resets need no deletable filter**: the ``Set(url, ReadyToEnqueue)``
+  reset on non-accepted content types (workflow.go:136) is a ``state=0``
+  row in the seen table.  Its bloom bits stay set, so a later rediscovery
+  is a bloom positive, and the exact anti-join decides it: that join drops
+  only rows with ``state >= Enqueued``, so the reset URL is published
+  again.  A filter that supports deletes would only matter if the filter
+  itself were the membership authority; here it never is.
 
 Scale design — the filter NEVER lives on the driver and no row data is ever
 collected: it is a **segmented bloom table** ``(segment int, bits binary)``
@@ -32,9 +36,8 @@ stored in the catalog, segment = ``pmod(url_hash, n_segments)``.
 * at 10^10 URLs / 1% fpp the filter is ~12 GB total; with 1024 segments each
   bitmap row is ~12 MB — shuffle-safe.  Sandbox uses smaller segment counts.
 
-The driver-resident ``BloomFilter`` class remains the per-partition/per-
-segment compute kernel (and the unit-test surface); ``make_bloom_probe_udf``
-(closure-ship) is kept only for single-process use.
+The ``BloomFilter`` class is the per-segment compute kernel (and the
+unit-test surface).
 """
 
 from __future__ import annotations
@@ -45,7 +48,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 
 def _positions(hashes: np.ndarray, k: int, n_bits: int) -> np.ndarray:
@@ -105,48 +107,6 @@ class BloomFilter:
                 f"expects {expected} — stale segment from an old build?"
             )
         return cls(n_bits, k, np.frombuffer(data, dtype=np.uint8).copy())
-
-
-def build_bloom_distributed(
-    df: DataFrame, hash_col: str, n_items_estimate: int, fpp: float = 0.01
-) -> BloomFilter:
-    """OR-reduce per-partition partial bitmaps (the distributed build path).
-
-    Each partition builds a fixed-size partial via mapInPandas; the driver
-    ORs them.  Collected data = n_partitions × bitmap size, never row data.
-    """
-    proto = BloomFilter.sized_for(n_items_estimate, fpp)
-    n_bits, k = proto.n_bits, proto.k
-
-    def partials(batches):
-        bf = BloomFilter(n_bits, k)
-        saw = False
-        for pdf in batches:
-            saw = True
-            bf.add_many(pdf[hash_col].to_numpy(dtype=np.int64))
-        if saw:
-            yield pd.DataFrame({"bits": [bf.to_bytes()]})
-
-    parts = df.select(hash_col).mapInPandas(partials, "bits binary").collect()
-    out = BloomFilter(n_bits, k)
-    for row in parts:
-        out.bits |= np.frombuffer(row["bits"], dtype=np.uint8)
-    return out
-
-
-def make_bloom_probe_udf(bloom: BloomFilter):
-    """Vectorized membership probe over an xxhash64 column.
-
-    The bitmap travels to executors by closure (broadcast-equivalent for the
-    py4j path; on a real cluster use ``spark.sparkContext.broadcast``)."""
-    blob, n_bits, k = bloom.to_bytes(), bloom.n_bits, bloom.k
-
-    @F.pandas_udf(BooleanType())
-    def probe(hashes: pd.Series) -> pd.Series:
-        bf = BloomFilter.from_bytes(blob, n_bits, k)
-        return pd.Series(bf.contains_many(hashes.to_numpy(dtype=np.int64)))
-
-    return probe
 
 
 # -- segmented bloom (catalog-table form; nothing driver-resident) -----------
@@ -251,80 +211,6 @@ def bloom_sizing(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
     """(n_bits, k) for a capacity — shared by build and probe sides."""
     bf = BloomFilter.sized_for(max(n_items, 1), fpp)
     return bf.n_bits, bf.k
-
-
-class CuckooFilter:
-    """Minimal cuckoo filter (4-slot buckets, 16-bit fingerprints) with
-    delete — the fallback for the ``Set(url, ReadyToEnqueue)`` reset path
-    (workflow.go:136) where membership must be removable.
-
-    numpy-backed; deterministic eviction (seeded per-filter RNG).
-    """
-
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int):
-        self.n_buckets = int(2 ** math.ceil(math.log2(max(n_buckets, 2))))
-        self.table = np.zeros((self.n_buckets, 4), dtype=np.uint16)  # 0 = empty
-        self._rng = np.random.default_rng(42)
-
-    @staticmethod
-    def _fingerprint(h: np.ndarray) -> np.ndarray:
-        fp = ((h >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
-        return np.where(fp == 0, np.uint16(1), fp)
-
-    def _i1(self, h: np.ndarray) -> np.ndarray:
-        return (h & np.uint64(self.n_buckets - 1)).astype(np.int64)
-
-    def _i2(self, i1: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        mix = fp.astype(np.uint64) * np.uint64(0x5BD1E995)
-        return ((i1.astype(np.uint64) ^ mix) & np.uint64(self.n_buckets - 1)).astype(np.int64)
-
-    def add(self, h: int) -> bool:
-        h = np.uint64(np.int64(h).astype(np.uint64))
-        fp = int(self._fingerprint(np.array([h]))[0])
-        i1 = int(self._i1(np.array([h]))[0])
-        i2 = int(self._i2(np.array([i1]), np.array([fp], dtype=np.uint16))[0])
-        for i in (i1, i2):
-            empty = np.where(self.table[i] == 0)[0]
-            if len(empty):
-                self.table[i, empty[0]] = fp
-                return True
-        i = i1
-        for _ in range(self.MAX_KICKS):
-            slot = int(self._rng.integers(0, 4))
-            fp, self.table[i, slot] = int(self.table[i, slot]), fp
-            i = int(self._i2(np.array([i]), np.array([fp], dtype=np.uint16))[0])
-            empty = np.where(self.table[i] == 0)[0]
-            if len(empty):
-                self.table[i, empty[0]] = fp
-                return True
-        return False  # full — caller must resize/rebuild
-
-    def _locate(self, h: int):
-        hu = np.uint64(np.int64(h).astype(np.uint64))
-        fp = int(self._fingerprint(np.array([hu]))[0])
-        i1 = int(self._i1(np.array([hu]))[0])
-        i2 = int(self._i2(np.array([i1]), np.array([fp], dtype=np.uint16))[0])
-        return fp, i1, i2
-
-    def contains(self, h: int) -> bool:
-        fp, i1, i2 = self._locate(h)
-        return bool((self.table[i1] == fp).any() or (self.table[i2] == fp).any())
-
-    def delete(self, h: int) -> bool:
-        fp, i1, i2 = self._locate(h)
-        for i in (i1, i2):
-            slots = np.where(self.table[i] == fp)[0]
-            if len(slots):
-                self.table[i, slots[0]] = 0
-                return True
-        return False
-
-    def contains_many(self, hashes: np.ndarray) -> np.ndarray:
-        return np.fromiter(
-            (self.contains(int(h)) for h in hashes), dtype=bool, count=len(hashes)
-        )
 
 
 def seen_merge(seen: DataFrame, delta: DataFrame) -> DataFrame:

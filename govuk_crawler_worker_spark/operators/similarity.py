@@ -28,15 +28,6 @@ from pyspark.sql.window import Window
 from govuk_crawler_worker_spark.operators import fan_out
 
 
-def _with_norm(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return emb.select(
-        F.col(id_col).alias("vid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "norm", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda a, x: a + x * x))
-    )
-
-
 # -- r8 shared scorer machinery ----------------------------------------------
 #
 # All three top-k paths used to score candidates with a per-pair JVM
@@ -244,18 +235,6 @@ def _quantize(m: np.ndarray) -> np.ndarray:
             "normalize or scale the vectors"
         )
     return q
-
-
-def lsh_bucket_udf(dim: int, n_planes: int = 8, seed: int = 42):
-    planes = _planes(dim, n_planes, seed)
-
-    @F.pandas_udf("long")
-    def bucket(vecs: pd.Series) -> pd.Series:
-        m = _quantize(np.stack(vecs.to_numpy()))  # (batch, dim) int64
-        signs = (m @ planes.T) > 0  # (batch, n_planes)
-        return pd.Series(signs.dot(1 << np.arange(n_planes)).astype(np.int64))
-
-    return bucket
 
 
 def lsh_buckets_udf(dim: int | None, n_planes: int, n_tables: int, seed: int = 42):

@@ -44,6 +44,7 @@ Scale notes (10^10-URL frontier, 1000 executors):
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -78,7 +79,7 @@ N_PRIORITY_BUCKETS = 4  # frontier partition key: priority_bucket = clamp(priori
 # fallback (the mis-bucketed prefix can still fill claim_limit).  Pruning
 # therefore only engages when the stored scheme matches; a legacy catalog
 # falls back to the always-correct full frontier scan until
-# migrate_priority_buckets() rewrites its buckets.
+# migrate_buckets() rewrites its buckets.
 PB_SCHEME = 2  # 2 = clamped/ordered (priority_bucket_col); 1/absent = legacy mod
 
 # state-table bucketing DEFAULTS (sandbox-sized; a production catalog runs
@@ -94,6 +95,36 @@ SEEN_BUCKETS = 32  # seen bucketed by pmod(url_hash, N)
 FRONTIER_HOST_BUCKETS = 8  # frontier by (priority_bucket, pmod(hash(host), M))
 BLOOM_SEGMENTS = 16  # segmented bloom table rows
 ROBOTS_BUCKETS = 64  # live robots.txt rules table, bucketed by host hash
+
+# StatsD-style metrics are observability, not crawl state (the reference
+# fires them async over UDP, util/util.go:97-111): buffer them driver-side
+# and append every N commits (+ a drain-end flush) so the small-batch BFS
+# regime doesn't pay a parquet write job per batch for a 5-row table.  At
+# most N batches of timings are lost on a crash — never any crawl state.
+METRICS_FLUSH_BATCHES = 8
+
+# session confs run_batch resizes per wave
+BATCH_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.codegen.wholeStage",
+)
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, keys):
+    """Yield the session's values of ``keys`` (None = not set) and restore
+    exactly those on exit, also when the body raises — a caller never sees a
+    session conf changed by the work inside."""
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        yield saved
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def priority_bucket_col(priority):
@@ -156,7 +187,6 @@ class DrainLoop:
         fetcher=None,
         bloom_min_batch: int | None = None,
         mirror_root: str | None = None,
-        metrics_flush_batches: int = 8,
         debug_capture_plans: bool = False,
         seen_buckets: int | None = None,
         frontier_host_buckets: int | None = None,
@@ -209,24 +239,7 @@ class DrainLoop:
         # optional disk-mirror export (workflow.go:173-189): executors write
         # MIRROR_ROOT/<rel_path> during the batch via pass-through stages
         self.mirror_root = mirror_root
-        # Wave-sized shuffling: a 500-row BFS wave through 32-partition
-        # shuffles pays 32 tasks of scheduling per stage for nothing (the
-        # small-batch floor is stage-scheduling bound — measured ~30% of
-        # per-batch latency).  Size shuffle partitions to the eligible wave
-        # (~2k rows/partition, floor 8), capped at the session's configured
-        # value so big batches are untouched; restored after drain().
-        self._shuffle0 = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        self._aqe0 = str(self.spark.conf.get("spark.sql.adaptive.enabled", "true")).lower()
-        self._codegen0 = str(
-            self.spark.conf.get("spark.sql.codegen.wholeStage", "true")
-        ).lower()
-        # StatsD-style metrics are observability, not crawl state (the
-        # reference fires them async over UDP, util/util.go:97-111): buffer
-        # them driver-side and append every N commits (+ a drain-end flush)
-        # so the small-batch BFS regime doesn't pay a parquet write job per
-        # batch for a 5-row table.  At most N batches of timings are lost on
-        # a crash — never any crawl state.
-        self.metrics_flush_batches = max(1, int(metrics_flush_batches))
+        # buffered metrics rows, flushed every METRICS_FLUSH_BATCHES commits
         self._pending_metrics: list[tuple] = []
         # test hook: capture key physical plans (publish dedup join strategy)
         self.debug_capture_plans = debug_capture_plans
@@ -609,23 +622,37 @@ class DrainLoop:
     def run_batch(self, b: int, eligible_hint: int | None = None) -> BatchStats:
         """One micro-batch.  ``eligible_hint`` = frontier row count if the
         caller already knows it (lets the claim skip the global sort when the
-        claim limit cannot bind)."""
+        claim limit cannot bind).  The batch sizes the BATCH_CONFS to its
+        wave; they are restored on return and on error."""
+        with scoped_confs(self.spark, BATCH_CONFS) as confs0:
+            return self._run_batch(b, eligible_hint, confs0)
+
+    def _run_batch(
+        self, b: int, eligible_hint: int | None, confs0: dict[str, str | None]
+    ) -> BatchStats:
         t0 = time.monotonic()
         cfg, u = self.config, self.udfs
         stats = BatchStats(batch_id=b)
         stage_t = time.monotonic()
         if eligible_hint is not None:
-            wave_parts = max(8, min(self._shuffle0, eligible_hint // 2000))
+            # Wave-sized shuffling: a 500-row BFS wave through 32-partition
+            # shuffles pays 32 tasks of scheduling per stage for nothing
+            # (the small-batch floor is stage-scheduling bound — measured
+            # ~30% of per-batch latency).  Size shuffle partitions to the
+            # eligible wave (~2k rows/partition, floor 8), capped at the
+            # session's configured value so big batches are untouched.
+            shuffle0 = int(confs0["spark.sql.shuffle.partitions"] or 32)
+            wave_parts = max(8, min(shuffle0, eligible_hint // 2000))
             self.spark.conf.set("spark.sql.shuffle.partitions", str(wave_parts))
             # AQE re-plans stage-by-stage — a driver round trip per shuffle.
             # On a small wave (the BFS feedback regime, ~30 stages of a few
             # hundred rows) that latency IS the batch floor, and the
             # partitions are already wave-sized above, so AQE has nothing
             # left to optimize: turn it off for the batch (restored at batch
-            # end / drain exit).  Big batches and real clusters keep it —
-            # its skew-join splitting is exactly what hot-host shuffles
-            # need at 100 TB.
-            if eligible_hint <= 5000 and self._aqe0 == "true":
+            # end).  Big batches and real clusters keep it — its skew-join
+            # splitting is exactly what hot-host shuffles need at 100 TB.
+            aqe0 = (confs0["spark.sql.adaptive.enabled"] or "true").lower()
+            if eligible_hint <= 5000 and aqe0 == "true":
                 self.spark.conf.set("spark.sql.adaptive.enabled", "false")
             if eligible_hint <= 2000:
                 # whole-stage codegen compiles the (big) batch plan anew per
@@ -1429,8 +1456,8 @@ class DrainLoop:
         frontier_delta = requeues.unionByName(inserts)
 
         # ---- metrics (B30 StatsD labels) --------------------------------------
-        # buffered driver-side, flushed every metrics_flush_batches commits
-        # (+ drain-end flush) — see __init__
+        # buffered driver-side, flushed every METRICS_FLUSH_BATCHES commits
+        # (+ drain-end flush)
         stats.stage_ms["read_from_queue"] = 0.0  # folded into claim/crawl_url
         self._pending_metrics.extend(
             (b, stage, float(ms), int(stats.claimed), 0)
@@ -1441,7 +1468,7 @@ class DrainLoop:
         # skip appends that would write empty tables (counts already known —
         # saves 1-2 write jobs per batch in the BFS tail)
         appends = {}
-        if (b + 1) % self.metrics_flush_batches == 0 and self._pending_metrics:
+        if (b + 1) % METRICS_FLUSH_BATCHES == 0 and self._pending_metrics:
             appends["metrics"] = self.spark.createDataFrame(
                 self._pending_metrics, S.METRICS_SCHEMA
             )
@@ -1550,8 +1577,6 @@ class DrainLoop:
         self.catalog.commit(appends=appends, merges=merges, meta=new_meta)
         stats.frontier_size = new_meta["frontier_size"]
         stats.duration_s = time.monotonic() - t0
-        self.spark.conf.set("spark.sql.adaptive.enabled", self._aqe0)
-        self.spark.conf.set("spark.sql.codegen.wholeStage", self._codegen0)
         return stats
 
     # -- maintenance ------------------------------------------------------------
@@ -1583,40 +1608,6 @@ class DrainLoop:
         new_meta["frontier_pb_counts"] = pb_counts
         self.catalog.commit(meta=new_meta)
 
-    def migrate_priority_buckets(self) -> None:
-        """One-time migration for catalogs written under an older
-        priority-bucket scheme (mod-assigned buckets): recompute
-        ``priority_bucket`` as the CLAMPED ordering for every frontier row,
-        rewrite the frontier's buckets (`_full` merge — stale buckets
-        dropped), refresh the per-bucket counts, and stamp the scheme in the
-        commit meta so the claim-scan pruning re-engages.  O(frontier) once;
-        until it runs, a mismatched catalog simply claims via the exact
-        full-scan path (correct, just un-pruned)."""
-        rows = (
-            self.catalog.read("frontier", S.FRONTIER_SCHEMA)
-            .withColumn("priority_bucket", priority_bucket_col(F.col("priority")))
-            .localCheckpoint(eager=True)
-        )
-        pb_rows = (
-            rows.groupBy("priority_bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-        )
-        pb_counts = {str(int(r["priority_bucket"])): int(r["n"]) for r in pb_rows}
-        new_meta = dict(self.catalog.latest()["meta"])
-        new_meta["frontier_size"] = sum(pb_counts.values())
-        new_meta["frontier_pb_counts"] = pb_counts
-        new_meta["pb_scheme"] = PB_SCHEME
-        self.catalog.commit(
-            merges={
-                "frontier": dict(
-                    delta=rows,
-                    key="url_canon",
-                    bucket_of=self._frontier_bucket_of,
-                    _full=True,
-                )
-            },
-            meta=new_meta,
-        )
-
     def migrate_buckets(
         self,
         seen_buckets: int | None = None,
@@ -1624,15 +1615,16 @@ class DrainLoop:
         bloom_segments: int | None = None,
     ) -> None:
         """One-time rewrite of the state tables into a NEW bucket geometry
-        (the migrate_priority_buckets pattern applied to the r4 VERDICT's
-        'hardcoded 32/8/16' gap): full `_full` merge of seen + frontier in
-        ONE atomic commit with the new bucket functions, ``bucket_scheme``
-        stamped, and the bloom filter meta dropped (the next bloom batch
-        rebuilds at the new segment count — over-inclusion-safe).  O(table)
-        once; afterwards every bucketed read/write path re-engages at the
-        new counts.  Defaults: the counts the constructor REQUESTED (so
-        `DrainLoop(..., seen_buckets=128)` on an old catalog migrates to 128
-        with a bare `migrate_buckets()`)."""
+        (also the priority-bucket scheme migration: every frontier row's
+        ``priority_bucket`` is recomputed and ``pb_scheme`` stamped): full
+        `_full` merge of seen + frontier in ONE atomic commit with the new
+        bucket functions, ``bucket_scheme`` stamped, and the bloom filter
+        meta dropped (the next bloom batch rebuilds at the new segment
+        count — over-inclusion-safe).  O(table) once; afterwards every
+        bucketed read/write path re-engages at the new counts.  Defaults:
+        the counts the constructor REQUESTED (so `DrainLoop(...,
+        seen_buckets=128)` on an old catalog migrates to 128 with a bare
+        `migrate_buckets()`)."""
         new_scheme = {
             "seen": int(seen_buckets or self.requested_bucket_scheme["seen"]),
             "frontier_host": int(
@@ -1716,11 +1708,6 @@ class DrainLoop:
         try:
             return self._drain(b, end, out, progress)
         finally:
-            # restore the session's configured shuffle width + AQE (run_batch
-            # sizes both to each wave) and flush any buffered metrics
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self._shuffle0))
-            self.spark.conf.set("spark.sql.adaptive.enabled", self._aqe0)
-            self.spark.conf.set("spark.sql.codegen.wholeStage", self._codegen0)
             self.flush_metrics()
 
     def _drain(self, b, end, out, progress):

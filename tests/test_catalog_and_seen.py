@@ -1,4 +1,4 @@
-"""Unit tests: snapshot catalog atomicity + bloom/cuckoo filters + seen merge.
+"""Unit tests: snapshot catalog atomicity + bloom filter + seen merge.
 
 Mirrors the reference's ttl_hash_set suite semantics (absent→0, sequential
 Incr, reset/delete — ttl_hash_set_test.go:15-177) at the table level.
@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 from govuk_crawler_worker_spark.operators.seen import (
     BloomFilter,
-    CuckooFilter,
-    build_bloom_distributed,
     expire_seen,
-    make_bloom_probe_udf,
     seen_merge,
 )
 from govuk_crawler_worker_spark.plans import schemas as S
@@ -74,38 +71,6 @@ class TestBloom:
         bf.add_many(items)
         fp = bf.contains_many(others).mean()
         assert fp < 0.05
-
-    def test_distributed_build_and_probe_udf(self, spark):
-        df = spark.range(0, 2000, 1, 8).select(F.xxhash64("id").alias("h"))
-        bf = build_bloom_distributed(df, "h", 2000)
-        probe = make_bloom_probe_udf(bf)
-        hits = df.select(probe("h").alias("m")).agg(F.sum(F.col("m").cast("int"))).collect()[0][0]
-        assert hits == 2000  # no false negatives, distributed build
-        misses = (
-            spark.range(10_000, 30_000, 1, 8)
-            .select(F.xxhash64("id").alias("h"))
-            .select(probe("h").alias("m"))
-            .agg(F.avg(F.col("m").cast("int")))
-            .collect()[0][0]
-        )
-        assert misses < 0.05
-
-
-class TestCuckoo:
-    def test_add_contains_delete(self):
-        cf = CuckooFilter(1024)
-        hs = [hash(f"url{i}") for i in range(500)]
-        for h in hs:
-            assert cf.add(h)
-        assert cf.contains_many(np.array(hs)).all()
-        # the reset path: Set(url, ReadyToEnqueue) must remove membership
-        for h in hs[:100]:
-            assert cf.delete(h)
-        assert not cf.contains_many(np.array(hs[:100])).any() or True
-        # deleted fingerprints may survive only via unrelated collisions —
-        # require at least 95% really gone
-        assert cf.contains_many(np.array(hs[:100])).mean() < 0.05
-        assert cf.contains_many(np.array(hs[100:])).all()
 
 
 class TestSeenTable:

@@ -369,11 +369,69 @@ class TestSegmentedBloom:
             for r in catalog.read("seen").select("url_canon", "state").collect()
         }
         assert seen == sim.seen
+        # the reset path (non-accepted content type → state 0) ran under the
+        # bloom: its bits stay set, and the exact anti-join settles the
+        # stale positive — no deletable filter is needed
+        assert S.STATE_READY_TO_ENQUEUE in seen.values()
         # the bloom table exists, is segmented, and its meta is committed
         bloom = catalog.read("bloom")
         assert 0 < bloom.count()
         meta = catalog.latest()["meta"]["bloom"]
         assert meta["n_bits"] > 0 and meta["wm"] > 0
+
+
+class TestBatchConfsRestored:
+    """run_batch sizes shuffle partitions, AQE and whole-stage codegen to
+    each wave; a caller must get the session back as it was — after a
+    normal return and after a fetcher error, not only via drain()."""
+
+    CONFS = {  # None = not set in the session
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.codegen.wholeStage": None,
+    }
+
+    @staticmethod
+    def _apply(spark, confs):
+        for k, v in confs.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    def _confs_after_batch(self, spark, fetcher=None):
+        world = build_world(n_pages=18, seed=42)
+        payload, content, seeds = world_to_spark(spark, world)
+        catalog = Catalog(spark, tempfile.mkdtemp(prefix="confs_"))
+        loop = DrainLoop(
+            spark, catalog, world.config, content, payload, fetcher=fetcher
+        )
+        loop.seed(seeds)
+        old = {k: spark.conf.get(k, None) for k in self.CONFS}
+        error = None
+        try:
+            self._apply(spark, self.CONFS)
+            try:
+                loop.run_batch(0, eligible_hint=3)
+            except RuntimeError as e:
+                error = str(e)
+            return {k: spark.conf.get(k, None) for k in self.CONFS}, error
+        finally:
+            self._apply(spark, old)
+
+    def test_restored_after_batch(self, spark):
+        after, error = self._confs_after_batch(spark)
+        assert error is None
+        assert after == self.CONFS
+
+    def test_restored_after_fetcher_error(self, spark):
+        class Broken:
+            def fetch(self, claimed, epoch=None):
+                raise RuntimeError("fetch failed")
+
+        after, error = self._confs_after_batch(spark, fetcher=Broken())
+        assert error == "fetch failed"
+        assert after == self.CONFS
 
 
 class TestRobotsInDrain:

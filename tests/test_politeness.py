@@ -1,12 +1,12 @@
 """Salted politeness pacing: per-host cadence never violated, buckets
-interleave, robots prefixes enforced."""
+interleave, robots user-agent groups selected."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from govuk_crawler_worker_spark.config import CrawlConfig
-from govuk_crawler_worker_spark.operators.politeness import pace_claim, robots_filter
+from govuk_crawler_worker_spark.operators.politeness import pace_claim
 from govuk_crawler_worker_spark.plans import schemas as S
 
 
@@ -46,19 +46,17 @@ def test_pacing_deterministic(spark):
     assert a == b
 
 
-def test_robots_filter(spark):
-    cfg = CrawlConfig(robots_disallow={"hot.gov.uk": ("/p00", "/private")})
-    out = robots_filter(_claim(spark), cfg).collect()
-    hot_paths = [r["url"] for r in out if r["host"] == "hot.gov.uk"]
-    assert all("/p00" not in p for p in hot_paths)
-    assert any("/p01" in p for p in hot_paths)
-    assert len([r for r in out if r["host"] == "cold.gov.uk"]) == 6
-
-
 class TestRobotsParser:
-    def test_groups_and_agent_specificity(self):
-        from govuk_crawler_worker_spark.operators.politeness import parse_robots_txt
+    """User-agent group selection of the one robots.txt parser
+    (``plans.robots.parse_robots``)."""
 
+    @staticmethod
+    def _dis(txt, agent):
+        from govuk_crawler_worker_spark.plans.robots import parse_robots
+
+        return tuple(p for p, allow in parse_robots(txt, agent) if not allow)
+
+    def test_groups_and_agent_specificity(self):
         txt = """
 # site rules
 User-agent: *
@@ -72,15 +70,13 @@ Disallow: /private
 User-agent: otherbot
 Disallow: /
 """
-        assert parse_robots_txt(txt, "randombot") == ("/search", "/admin")
+        assert self._dis(txt, "randombot") == ("/search", "/admin")
         # exact agent beats *
-        assert parse_robots_txt(txt, "govuk_crawler") == ("/private",)
+        assert self._dis(txt, "govuk_crawler") == ("/private",)
         # substring match: UA string contains the token
-        assert parse_robots_txt(txt, "govuk_crawler_worker_spark/0.1.0 on host 'x'") == ("/private",)
-        assert parse_robots_txt(txt, "otherbot") == ("/",)
+        assert self._dis(txt, "govuk_crawler_worker_spark/0.1.0 on host 'x'") == ("/private",)
+        assert self._dis(txt, "otherbot") == ("/",)
 
     def test_empty_disallow_allows_all(self):
-        from govuk_crawler_worker_spark.operators.politeness import parse_robots_txt
-
-        assert parse_robots_txt("User-agent: *\nDisallow:\n", "x") == ()
-        assert parse_robots_txt("", "x") == ()
+        assert self._dis("User-agent: *\nDisallow:\n", "x") == ()
+        assert self._dis("", "x") == ()

@@ -391,9 +391,8 @@ class TestPrioritySchemeGuard:
         """ADVICE r3 (low): rows persisted under the legacy mod-assigned
         priority_bucket scheme violate the ordered-prefix invariant; with
         counts present but no matching pb_scheme stamp the claim must fall
-        back to the full scan (correct, un-pruned), and
-        migrate_priority_buckets() must rewrite buckets + re-enable
-        pruning."""
+        back to the full scan (correct, un-pruned), and migrate_buckets()
+        must rewrite buckets + re-enable pruning."""
         from govuk_crawler_worker_spark.plans.pipeline import PB_SCHEME
 
         cfg = CrawlConfig(claim_limit=4)
@@ -409,7 +408,7 @@ class TestPrioritySchemeGuard:
         catalog.commit(meta=meta)
         fr, pruned = loop._read_claim_frontier(catalog.latest()["meta"], 12)
         assert not pruned  # full scan — never trust foreign-scheme buckets
-        loop.migrate_priority_buckets()
+        loop.migrate_buckets()
         meta2 = catalog.latest()["meta"]
         assert meta2["pb_scheme"] == PB_SCHEME
         fr2, pruned2 = loop._read_claim_frontier(meta2, 12)

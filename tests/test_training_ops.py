@@ -422,13 +422,6 @@ class TestDedupLifecycle:
         # short docs produce no shingles → never appear in a pair
         assert all(a not in (2, 3, 4) and b not in (2, 3, 4) for a, b in pairs)
 
-    def test_short_docs_dont_crash_string_shingles(self, spark):
-        from govuk_crawler_worker_spark.operators.dedup import shingles
-
-        got = shingles(self._mixed_corpus(spark), n=3).collect()
-        assert all(r["doc_id"] in (0, 1) for r in got)
-        assert len(got) > 0
-
     def test_repeated_calls_release_cached_intermediates(self, spark):
         """minhash_lsh_pairs persists three intermediates and simhash_pairs
         one; both must release them once the verified result materializes —
@@ -502,6 +495,38 @@ class TestDedupLifecycle:
             for _ in range(3):
                 assert q(spark, "/root/testdata/sf0.001").count() == 1
             assert persistent_ids() - base == set()
+        finally:
+            em.reset_memos()
+
+
+    def test_simhash_memo_survives_alternating_sf_dirs(self, spark, monkeypatch):
+        """dedup_simhash on sf A, then B, then A again in one session: the
+        third call must reuse A's persisted signature frame — a memo that
+        evicts on every new sf dir recomputes the signature pass each time
+        the caller alternates."""
+        import __spark_entry__ as em
+        from govuk_crawler_worker_spark.operators import dedup
+
+        builds = []
+        real = dedup.simhash64
+
+        def counting(*a, **kw):
+            builds.append(1)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(dedup, "simhash64", counting)
+        a, b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
+        q = em.queries()["dedup_simhash"]
+        em.reset_memos()
+        try:
+            first = sorted(map(tuple, q(spark, a).collect()))
+            sig_a = em._shared_simhash_sig(spark, a)
+            q(spark, b).count()
+            again = sorted(map(tuple, q(spark, a).collect()))
+            assert len(builds) == 2  # A and B, never A twice
+            assert em._shared_simhash_sig(spark, a) is sig_a
+            assert sig_a.is_cached  # B did not evict (unpersist) it
+            assert again == first
         finally:
             em.reset_memos()
 
