@@ -5,22 +5,29 @@ Replaces the reference's hand-wired goroutine pipeline (main.go:139-145):
     deliveries → ReadFromQueue → CrawlURL×4 → WriteItemToDisk → ExtractURLs
                → {PublishURLs → (feeds back), AcknowledgeItem}
 
-with, per batch b:
+with one stage method per reference stage, called in order by run_batch:
 
-    claim      scan frontier, partition-prunable filters, per-host politeness
-               budget (window), priority order + claim limit         (A1)
-    fetch      join the synthetic content table (tests/bench) — on a real
-               cluster this join is the applyInPandas HTTP fetch — plus the
-               seen-state left join for the retry gate                (A2)
-    route      one `when` chain: retry-gate dead / 404 dead / 429 requeue /
-               5XX incr+requeue / redirect-as-HTML / non-accepted reset /
-               HTML extract / other ack                               (A2,A3)
-    extract    vectorized pandas UDF + explode                        (A4)
-    publish    param gate → canonicalize → bloom pre-filter → exact
-               left-anti join vs seen → frontier inserts              (A5)
-    commit     ONE atomic multi-table commit: fetched append, dead append,
-               metrics append, frontier & seen replace, checkpoint meta
-               (ack/reject/publish all-at-once — A6 + exactly-once)
+    _claim        scan frontier, partition-prunable filters, per-host politeness
+                  budget (window), priority order + claim limit, then the
+                  claimed rows' seen states for the retry gate        (A1)
+    _fetch_route  fetch (a content-table join in tests/bench, paced HTTP GETs
+                  in applyInPandas in production) and one `when` route chain:
+                  retry-gate dead / 404 dead / 429 requeue / 5XX incr+requeue /
+                  redirect-as-HTML / non-accepted reset / HTML / other ack;
+                  the extraction UDF runs in the same pass            (A2)
+    _fetched_rows fetched-table rows (+ optional disk mirror)         (A3)
+    _extract      explode the extracted outlinks (+ sitemap URLs)     (A4)
+    _publish      param gate → canonicalize → bloom pre-filter → exact
+                  left-anti join vs seen → frontier inserts, then ONE
+                  fused stats collect                                 (A5)
+    _fold_bloom   OR the batch's seen delta into the segmented bloom
+    _commit       ONE atomic multi-table commit: fetched, dead, metrics
+                  appends, frontier & seen merges, checkpoint meta
+                  (ack/reject/publish all-at-once — A6 + exactly-once)
+
+Live robots.txt (opt-in) runs between claim and fetch (plans/robots.py:
+live_robots).  ``step`` is the per-batch drain policy (maintenance cadence,
+zero-claim handling) shared by ``drain`` and streaming/drain.py.
 
 Scale notes (10^10-URL frontier, 1000 executors):
 * claim: the per-host window shuffles by host; the hot-host partition is the
@@ -65,9 +72,16 @@ from govuk_crawler_worker_spark.operators.seen import (
     seen_merge,
 )
 from govuk_crawler_worker_spark.plans import schemas as S
+from govuk_crawler_worker_spark.plans.robots import (
+    LiveRobots,
+    crawl_delay_budget_col,
+    live_robots,
+    robots_blocked_col,
+)
 from govuk_crawler_worker_spark.sources.catalog import Catalog
 
 REDIRECT_STATUSES = (301, 302, 303, 307)
+REQUEUE_ROUTES = ("requeue_429", "requeue_5xx", "requeue_robots")
 
 N_PRIORITY_BUCKETS = 4  # frontier partition key: priority_bucket = clamp(priority)
 
@@ -94,7 +108,18 @@ PB_SCHEME = 2  # 2 = clamped/ordered (priority_bucket_col); 1/absent = legacy mo
 SEEN_BUCKETS = 32  # seen bucketed by pmod(url_hash, N)
 FRONTIER_HOST_BUCKETS = 8  # frontier by (priority_bucket, pmod(hash(host), M))
 BLOOM_SEGMENTS = 16  # segmented bloom table rows
-ROBOTS_BUCKETS = 64  # live robots.txt rules table, bucketed by host hash
+DEFAULT_BUCKET_SCHEME = {
+    "seen": SEEN_BUCKETS,
+    "frontier_host": FRONTIER_HOST_BUCKETS,
+    "bloom_segments": BLOOM_SEGMENTS,
+}
+
+
+def _bucket_scheme(base: dict, seen, frontier_host, bloom_segments) -> dict[str, int]:
+    """``base`` with each requested (truthy) count overriding its entry."""
+    asked = dict(seen=seen, frontier_host=frontier_host, bloom_segments=bloom_segments)
+    return {k: int(asked[k] or v) for k, v in base.items()}
+
 
 # StatsD-style metrics are observability, not crawl state (the reference
 # fires them async over UDP, util/util.go:97-111): buffer them driver-side
@@ -140,6 +165,33 @@ def priority_bucket_col(priority):
     ).cast("int")
 
 
+def pb_counts_of(frontier: DataFrame) -> dict[str, int]:
+    """Rows per priority bucket, keyed as the commit meta stores them (one
+    bounded aggregate: at most N_PRIORITY_BUCKETS rows reach the driver)."""
+    rows = frontier.groupBy("priority_bucket").agg(F.count(F.lit(1)).alias("n"))
+    return {str(int(r["priority_bucket"])): int(r["n"]) for r in rows.collect()}
+
+
+def seen_rows(df: DataFrame, state, b: int) -> DataFrame:
+    """``df``'s URLs as seen-table rows in ``state`` as of batch ``b``."""
+    return df.select(
+        "url_hash",
+        "url_canon",
+        state.alias("state"),
+        F.lit(b).cast("long").alias("updated_batch"),
+    )
+
+
+def dead_rows(df: DataFrame, reason, b: int) -> DataFrame:
+    """``df``'s URLs as dead-table rows for ``reason`` in batch ``b``."""
+    return df.select(
+        "url",
+        "url_canon",
+        reason.alias("reason"),
+        F.lit(b).cast("long").alias("batch_id"),
+    )
+
+
 def seen_bucket_of(df, n_buckets: int = SEEN_BUCKETS):
     return F.pmod(F.col("url_hash"), F.lit(n_buckets))
 
@@ -166,6 +218,58 @@ class BatchStats:
     stats_rows: int = 0
 
 
+@dataclass
+class Batch:
+    """One batch's clock, eligible-row hint, previous commit meta and stats."""
+
+    b: int
+    eligible_hint: int | None
+    prev_meta: dict
+    stats: BatchStats
+
+
+@dataclass
+class Claim:
+    """A1 output: the claimed rows, the seen rows their retry gate reads (the
+    whole table unless ``prune_seen``: past broadcast size)."""
+
+    claimed: DataFrame
+    seen: DataFrame
+    prune_seen: bool
+
+
+@dataclass
+class BloomState:
+    """One batch's segmented bloom (DrainLoop._bloom_for_batch) and fold."""
+
+    probe: DataFrame
+    rows: DataFrame | None
+    meta: dict
+    rebuilt: bool
+    touched: list[int] | None = None
+
+    @property
+    def geometry(self) -> tuple[int, int, int]:
+        """(segments, n_bits, k) of the stored filter."""
+        meta = self.meta
+        return int(meta.get("segments", BLOOM_SEGMENTS)), meta["n_bits"], meta["k"]
+
+
+@dataclass
+class Published:
+    """A5 output: inserts, seen upserts, bloom and the stats-collect facts."""
+
+    inserts: DataFrame
+    seen_delta: DataFrame
+    bloom: BloomState | None
+    routes: dict[str, int] = field(default_factory=dict)  # claimed rows per route
+    extract_errors: int = 0
+    fetch_rows: int = 0  # fetched rows without query params (the fetched append)
+    pb_delta: dict[int, int] = field(default_factory=dict)  # frontier rows per pb
+    frontier_touched: set[int] = field(default_factory=set)
+    seen_touched: set[int] = field(default_factory=set)
+
+
 class DrainLoop:
     """Driver-controlled micro-batch loop; all state lives in catalog tables,
     so a killed job resumes from the last commit without re-fetching
@@ -183,7 +287,6 @@ class DrainLoop:
         backoff_batches: int | None = None,
         use_bloom: bool = True,
         origin: DataFrame | None = None,
-        validate_payload: bool = False,
         fetcher=None,
         bloom_min_batch: int | None = None,
         mirror_root: str | None = None,
@@ -200,7 +303,6 @@ class DrainLoop:
         self.spark = spark
         self.catalog = catalog
         self.config = config
-        self.content = content
         self.payload = payload
         if fetcher is None:
             if content is None:
@@ -213,20 +315,19 @@ class DrainLoop:
         # the micro-batch period — no executor ever sleeps for back-off.
         import math
 
+        def batches(seconds: float) -> int:
+            return max(1, math.ceil(seconds / config.batch_period_s))
+
         if ttl_batches == "auto":
-            ttl_batches = max(1, math.ceil(config.ttl_expire_s / config.batch_period_s))
-        self.ttl_batches = ttl_batches
+            ttl_batches = batches(config.ttl_expire_s)
         if backoff_batches is None:
-            backoff_batches = max(
-                1, math.ceil(config.backoff_429_s / config.batch_period_s)
-            )
-        self.backoff_batches = backoff_batches
+            backoff_batches = batches(config.backoff_429_s)
+        self.ttl_batches, self.backoff_batches = ttl_batches, backoff_batches
         self.use_bloom = use_bloom
         # north rule: each micro-batch validates decoded pixels against the
         # origin (PSNR ≥ 40 dB lossy / exact lossless, caption equality);
         # enabled when the ground-truth origin table is available.
         self.origin = origin
-        self.validate_payload = validate_payload and origin is not None
         self.udfs = make_udfs(config)
         self.extract_udf = make_extract_udf(config)
         # strategy switch for the publish dedup, Catalyst-style: while the
@@ -245,7 +346,7 @@ class DrainLoop:
         self.debug_capture_plans = debug_capture_plans
         self.debug_plans: dict[str, str] = {}
         # MOR-chain + physical-TTL compaction cadence (batches between
-        # compact_seen() calls inside _drain; 0/None disables)
+        # compact_seen() calls inside step(); 0/None disables)
         self.compact_batches = int(compact_batches or 0)
         # merge-on-read chain cap for the state tables (None → catalog
         # default 16): the read-fold-cost vs write-amplification knob —
@@ -255,9 +356,7 @@ class DrainLoop:
         # production surface): requires a fetcher exposing the opener
         # contract (HttpFetcher); the config-only static rules always apply
         self.fetch_robots = bool(fetch_robots and getattr(fetcher, "opener", None))
-        self.robots_ttl_batches = max(
-            1, math.ceil(config.robots_ttl_s / config.batch_period_s)
-        )
+        self.robots_ttl_batches = batches(config.robots_ttl_s)
         # unreachable robots.txt (5xx/redirect/transport) is retried after
         # this window instead of a full TTL — RFC 9309 requires the
         # complete-disallow only WHILE unreachable (r6 ADVICE)
@@ -273,42 +372,33 @@ class DrainLoop:
         # module defaults for writes (the only geometry this engine ever
         # shipped) but every read drops to full-scan semantics — correct for
         # any geometry — until migrate_buckets() rewrites and stamps it.
-        self.requested_bucket_scheme = {
-            "seen": int(seen_buckets) if seen_buckets else SEEN_BUCKETS,
-            "frontier_host": int(frontier_host_buckets)
-            if frontier_host_buckets
-            else FRONTIER_HOST_BUCKETS,
-            "bloom_segments": int(bloom_segments) if bloom_segments else BLOOM_SEGMENTS,
-        }
+        self.requested_bucket_scheme = _bucket_scheme(
+            DEFAULT_BUCKET_SCHEME, seen_buckets, frontier_host_buckets, bloom_segments
+        )
         manifest0 = catalog.latest()
         stamp = (manifest0.get("meta") or {}).get("bucket_scheme")
-        has_state = bool(manifest0["tables"].get("seen")) or bool(
-            (manifest0.get("parts", {}) or {}).get("seen")
-        ) or bool(manifest0["tables"].get("frontier")) or bool(
-            (manifest0.get("parts", {}) or {}).get("frontier")
+        parts = manifest0.get("parts", {}) or {}
+        has_state = any(
+            manifest0["tables"].get(t) or parts.get(t) for t in ("seen", "frontier")
         )
+        # unstamped state: full-scan reads until migrated; a fresh catalog
+        # is stamped by seed()
+        self.buckets_stamped = stamp is not None or not has_state
         if stamp is not None:
-            self.bucket_scheme = {
-                k: int(stamp.get(k, v)) for k, v in self.requested_bucket_scheme.items()
-            }
-            self.buckets_stamped = True
-        elif has_state:
-            self.bucket_scheme = {
-                "seen": SEEN_BUCKETS,
-                "frontier_host": FRONTIER_HOST_BUCKETS,
-                "bloom_segments": BLOOM_SEGMENTS,
-            }
-            self.buckets_stamped = False  # full-scan reads until migrated
+            req = self.requested_bucket_scheme
+            self._use_bucket_scheme({k: int(stamp.get(k, v)) for k, v in req.items()})
         else:
-            self.bucket_scheme = dict(self.requested_bucket_scheme)
-            self.buckets_stamped = True  # seed() stamps it
+            self._use_bucket_scheme(
+                DEFAULT_BUCKET_SCHEME if has_state else self.requested_bucket_scheme
+            )
+
+    def _use_bucket_scheme(self, scheme: dict[str, int]) -> None:
+        self.bucket_scheme = dict(scheme)
+        self.seen_buckets = scheme["seen"]
+        self.frontier_host_buckets = scheme["frontier_host"]
+        self.bloom_segments = scheme["bloom_segments"]
         # informational: a caller asked for counts the stored stamp overrides
-        self.bucket_scheme_mismatch = (
-            self.bucket_scheme != self.requested_bucket_scheme
-        )
-        self.seen_buckets = self.bucket_scheme["seen"]
-        self.frontier_host_buckets = self.bucket_scheme["frontier_host"]
-        self.bloom_segments = self.bucket_scheme["bloom_segments"]
+        self.bucket_scheme_mismatch = self.bucket_scheme != self.requested_bucket_scheme
 
     # effective-geometry bucket columns (close over the resolved counts)
     def _seen_bucket_of(self, df):
@@ -348,15 +438,9 @@ class DrainLoop:
         rows = rows.localCheckpoint(eager=True)
         # one bounded aggregate gives the seed count AND the per-priority-
         # bucket counts the claim-scan pruning needs (no extra job vs count())
-        pb_rows = rows.groupBy("priority_bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-        pb_counts = {str(int(r["priority_bucket"])): int(r["n"]) for r in pb_rows}
+        pb_counts = pb_counts_of(rows)
         n_seeds = sum(pb_counts.values())
-        seen = rows.select(
-            "url_hash",
-            "url_canon",
-            F.lit(S.STATE_ENQUEUED).alias("state"),
-            F.lit(0).cast("long").alias("updated_batch"),
-        )
+        seen = seen_rows(rows, F.lit(S.STATE_ENQUEUED), 0)
         self.catalog.commit(
             merges={
                 "frontier": dict(
@@ -455,7 +539,7 @@ class DrainLoop:
         claim size.  Counts may over-estimate (a TTL-expired republish
         upserts an existing frontier row) and back-off thins eligibility —
         both are safe: over-read costs a little I/O, under-claim triggers
-        the exact full-scan fallback in run_batch.  Returns (frontier_df,
+        the exact full-scan fallback in _claim.  Returns (frontier_df,
         pruned: bool)."""
         cfg = self.config
         pb_counts = prev_meta.get("frontier_pb_counts")
@@ -495,7 +579,7 @@ class DrainLoop:
         live_delays: DataFrame | None = None,
     ):
         """Eligibility filter + salted politeness budget + global top-K,
-        rebalanced by url_hash.  Returns a LAZY plan — run_batch
+        rebalanced by url_hash.  Returns a LAZY plan — _claim
         materializes it (localCheckpoint) only when something must be
         collected off it before the fetch (priority-pruning fallback count,
         claim-gate bucket footprint past the seen broadcast threshold).
@@ -515,10 +599,6 @@ class DrainLoop:
                 F.col("host") == host, F.lit(cfg.host_budget(host))
             ).otherwise(budget)
         if live_delays is not None:
-            from govuk_crawler_worker_spark.plans.robots import (
-                crawl_delay_budget_col,
-            )
-
             eligible = eligible.join(F.broadcast(live_delays), "host", "left")
             live_budget = crawl_delay_budget_col(
                 F.col("crawl_delay"), b, cfg.batch_period_s
@@ -576,40 +656,52 @@ class DrainLoop:
         # rebalance by url_hash so fetch/extract/publish parallelize
         return claimed.repartition(n_parts, "url_hash")
 
-    def _anti_join_seen_bucketed(
-        self, cand: DataFrame, b: int, claim_delta: DataFrame
-    ) -> DataFrame:
-        """Exact publish dedup past broadcast scale: anti-join the candidates
-        against ONLY their seen buckets (PLANS.md §2's bucketed plan).  No
-        broadcast hint — at 10^10 seen URLs the build side must move by
-        bucketed shuffle, never ship whole to every executor.  ``cand`` must
-        be materialized (checkpointed): its bucket footprint is collected
-        first (bounded by SEEN_BUCKETS ints — never row data).  The claim
-        delta (5XX incr / reset, one batch, tiny) is merged in so the
-        happens-before of claim-phase seen writes over the publish Get is
-        preserved; same-canon rows share a bucket, so bucket pruning cannot
-        lose a membership row."""
-        if self.buckets_stamped:
+    def _expired_seen(self, b: int, rows: DataFrame | None = None):
+        """Seen rows after TTL expiry: ``rows``' seen buckets, or the full
+        table when not pruning (``rows`` None) or unstamped.  Returns (seen,
+        the bucket ids read; None = full scan)."""
+        # ``rows`` must be materialized: its bucket footprint is a bounded
+        # collect of bucket ids, never row data.  An unstamped legacy
+        # catalog's physical bucket geometry is unverified, so it gets the
+        # always-correct full scan (migrate_buckets() restores pruning).
+        buckets = None
+        if rows is not None and self.buckets_stamped:
             buckets = sorted(
                 int(r["sb"])
-                for r in cand.select(self._seen_bucket_of(cand).alias("sb"))
+                for r in rows.select(self._seen_bucket_of(rows).alias("sb"))
                 .distinct()
                 .collect()
             )
-            seen_read = self.catalog.read_buckets("seen", buckets, S.SEEN_SCHEMA)
+            seen = self.catalog.read_buckets("seen", buckets, S.SEEN_SCHEMA)
         else:
-            # unstamped legacy catalog: physical geometry unverified → the
-            # always-correct full scan (migrate_buckets() restores pruning)
-            buckets = [0]
-            seen_read = self.catalog.read("seen", S.SEEN_SCHEMA)
-        seen_b = expire_seen(seen_read, b, self.ttl_batches)
+            seen = self.catalog.read("seen", S.SEEN_SCHEMA)
+        return expire_seen(seen, b, self.ttl_batches), buckets
+
+    def _anti_join_seen(
+        self, cand: DataFrame, b: int, claim_delta: DataFrame, small_seen=None
+    ) -> DataFrame:
+        """Exact publish dedup: drop the candidates Enqueued in seen, with
+        the claim delta merged in.  ``small_seen`` (the claim's
+        broadcast-sized seen read) joins with a broadcast hint; otherwise
+        only the candidates' seen buckets are read, joined with no hint."""
+        # The claim delta (5XX incr / reset, one batch, tiny) preserves the
+        # happens-before of claim-phase seen writes over the publish Get.
+        # Past broadcast scale this is PLANS.md §2's bucketed plan: at 10^10
+        # seen URLs the build side must move by bucketed shuffle, never ship
+        # whole to every executor; same-canon rows share a bucket, so bucket
+        # pruning cannot lose a membership row.
+        seen, buckets = small_seen, None
+        if small_seen is None:
+            seen, buckets = self._expired_seen(b, cand)
         enq = (
-            seen_merge(seen_b, claim_delta)
+            seen_merge(seen, claim_delta)
             .where(F.col("state") >= S.STATE_ENQUEUED)
             .select("url_canon")
         )
+        if small_seen is not None:
+            enq = enq.hint("broadcast")
         out = cand.join(enq, "url_canon", "left_anti")
-        if self.debug_capture_plans and buckets:
+        if self.debug_capture_plans and buckets != []:
             # only keep a plan that actually reads seen buckets (a batch
             # with zero bloom-positive candidates proves nothing)
             self.debug_plans["publish_dedup"] = (
@@ -625,67 +717,96 @@ class DrainLoop:
         claim limit cannot bind).  The batch sizes the BATCH_CONFS to its
         wave; they are restored on return and on error."""
         with scoped_confs(self.spark, BATCH_CONFS) as confs0:
-            return self._run_batch(b, eligible_hint, confs0)
+            stats = BatchStats(batch_id=b)
+            marks = [time.monotonic()]
 
-    def _run_batch(
-        self, b: int, eligible_hint: int | None, confs0: dict[str, str | None]
-    ) -> BatchStats:
-        t0 = time.monotonic()
-        cfg, u = self.config, self.udfs
-        stats = BatchStats(batch_id=b)
-        stage_t = time.monotonic()
-        if eligible_hint is not None:
-            # Wave-sized shuffling: a 500-row BFS wave through 32-partition
-            # shuffles pays 32 tasks of scheduling per stage for nothing
-            # (the small-batch floor is stage-scheduling bound — measured
-            # ~30% of per-batch latency).  Size shuffle partitions to the
-            # eligible wave (~2k rows/partition, floor 8), capped at the
-            # session's configured value so big batches are untouched.
-            shuffle0 = int(confs0["spark.sql.shuffle.partitions"] or 32)
-            wave_parts = max(8, min(shuffle0, eligible_hint // 2000))
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(wave_parts))
-            # AQE re-plans stage-by-stage — a driver round trip per shuffle.
-            # On a small wave (the BFS feedback regime, ~30 stages of a few
-            # hundred rows) that latency IS the batch floor, and the
-            # partitions are already wave-sized above, so AQE has nothing
-            # left to optimize: turn it off for the batch (restored at batch
-            # end).  Big batches and real clusters keep it — its skew-join
-            # splitting is exactly what hot-host shuffles need at 100 TB.
-            aqe0 = (confs0["spark.sql.adaptive.enabled"] or "true").lower()
-            if eligible_hint <= 5000 and aqe0 == "true":
-                self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-            if eligible_hint <= 2000:
-                # whole-stage codegen compiles the (big) batch plan anew per
-                # batch — at a few hundred rows the Janino compile costs more
-                # than interpreted evaluation ever saves.  Restored with AQE.
-                self.spark.conf.set("spark.sql.codegen.wholeStage", "false")
+            def lap(label: str) -> None:
+                marks.append(time.monotonic())
+                stats.stage_ms[label] = (marks[-1] - marks[-2]) * 1000
 
-        prev_meta = dict(self.catalog.latest()["meta"])
-        seen_size = int(prev_meta.get("seen_size", 0))
+            self._size_confs(confs0, eligible_hint)
+            bt = Batch(b, eligible_hint, dict(self.catalog.latest()["meta"]), stats)
+            claim = self._claim(bt)
+            robots = LiveRobots()
+            if self.fetch_robots:
+                robots = live_robots(
+                    self.catalog,
+                    claim.claimed,
+                    self.fetcher,
+                    b,
+                    self.robots_ttl_batches,
+                    self.robots_retry_batches,
+                )
+            routed = self._fetch_route(b, claim, robots.lookup)
+            lap("crawl_url")
+            fetched_new = self._fetched_rows(b, routed)
+            lap("write_to_disk")
+            candidates = self._extract(routed, robots.sitemap_candidates)
+            lap("extract_urls")
+            pub = self._publish(bt, claim, routed, candidates)
+            lap("publish_urls")
+            self._fold_bloom(b, pub)
+            self._commit(bt, claim, routed, fetched_new, pub, robots)
+            stats.duration_s = time.monotonic() - marks[0]
+            return stats
 
-        # ---- A1: claim (priority-bucket-pruned scan + exact fallback) -------
+    def _size_confs(self, confs0: dict[str, str | None], eligible_hint) -> None:
+        """Size the BATCH_CONFS to the eligible wave (run_batch restores them)."""
+        if eligible_hint is None:
+            return
+        # Wave-sized shuffling: a 500-row BFS wave through 32-partition
+        # shuffles pays 32 tasks of scheduling per stage for nothing (the
+        # small-batch floor is stage-scheduling bound — measured ~30% of
+        # per-batch latency).  Size shuffle partitions to the eligible wave
+        # (~2k rows/partition, floor 8), capped at the session's configured
+        # value so big batches are untouched.
+        shuffle0 = int(confs0["spark.sql.shuffle.partitions"] or 32)
+        wave_parts = max(8, min(shuffle0, eligible_hint // 2000))
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(wave_parts))
+        # AQE re-plans stage-by-stage — a driver round trip per shuffle.  On
+        # a small wave (the BFS feedback regime, ~30 stages of a few hundred
+        # rows) that latency IS the batch floor, and the partitions are
+        # already wave-sized above, so AQE has nothing left to optimize:
+        # turn it off for the batch.  Big batches and real clusters keep it —
+        # its skew-join splitting is exactly what hot-host shuffles need at
+        # 100 TB.
+        aqe0 = (confs0["spark.sql.adaptive.enabled"] or "true").lower()
+        if eligible_hint <= 5000 and aqe0 == "true":
+            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        if eligible_hint <= 2000:
+            # whole-stage codegen compiles the (big) batch plan anew per
+            # batch — at a few hundred rows the Janino compile costs more
+            # than interpreted evaluation ever saves
+            self.spark.conf.set("spark.sql.codegen.wholeStage", "false")
+
+    def _claim(self, bt: Batch) -> Claim:
+        """A1: priority-bucket-pruned claim with its exact fallback, then the
+        claimed rows' seen states for the retry gate."""
         # The claim is materialized (localCheckpoint) only when something
         # must be collected off it before the fetch: the pruning fallback
         # count, or the claim-gate bucket footprint past the seen broadcast
         # threshold.  In the small-seen regime the lazy plan flows straight
         # into the routed pass (one materialization per batch, the BFS
         # floor's dominant cost).
-        frontier, pruned = self._read_claim_frontier(prev_meta, eligible_hint)
-        prune_seen = seen_size >= self.bloom_min_seen
+        cfg, b, eligible_hint = self.config, bt.b, bt.eligible_hint
+        prune_seen = int(bt.prev_meta.get("seen_size", 0)) >= self.bloom_min_seen
+        frontier, pruned = self._read_claim_frontier(bt.prev_meta, eligible_hint)
         # live robots Crawl-delay budgets: a TINY side table (only hosts
-        # whose robots.txt declares a delay — maintained by the robots merge
-        # below), broadcast into the claim's politeness window.  Existence
+        # whose robots.txt declares a delay — maintained by the robots
+        # merge), broadcast into the claim's politeness window.  Existence
         # is one manifest lookup; absent table = no live delays anywhere.
         live_delays = None
         if self.fetch_robots and self.catalog.exists("robots_delays"):
             live_delays = self.catalog.read(
                 "robots_delays", "host string, crawl_delay double"
             )
-        claimed = self._claim_stage(frontier, b, eligible_hint, live_delays)
-        if pruned or prune_seen:
-            # lazy: the fallback count / bucket-footprint collect right
-            # below is the first action and materializes it
-            claimed = claimed.localCheckpoint(eager=False)
+        def claim_from(frontier: DataFrame, checkpoint: bool) -> DataFrame:
+            claimed = self._claim_stage(frontier, b, eligible_hint, live_delays)
+            # lazy: the fallback count / bucket-footprint collect below is
+            # the first action and materializes it
+            return claimed.localCheckpoint(eager=False) if checkpoint else claimed
+
+        claimed = claim_from(frontier, pruned or prune_seen)
         if pruned and claimed.count() < cfg.claim_limit:
             # the pruned prefix under-delivered (back-off/politeness thinned
             # its eligible rows) — redo against the full frontier, so pruning
@@ -697,276 +818,47 @@ class DrainLoop:
             # unchanged by dropping lower-ranked rows.  Nothing was fetched
             # yet — the fetch runs strictly after the claim is final.
             frontier = self.catalog.read("frontier", S.FRONTIER_SCHEMA)
-            claimed = self._claim_stage(frontier, b, eligible_hint, live_delays)
-            if prune_seen:
-                claimed = claimed.localCheckpoint(eager=False)
-
-        # ---- A2: state lookup + fetch (pluggable) + status-driven route -----
+            claimed = claim_from(frontier, prune_seen)
         # The retry-gate lookup needs the claimed rows' seen states BEFORE
         # the fetch.  Strategy switch like the publish dedup: below
         # bloom_min_seen the seen table is broadcast-sized — one small scan,
         # shared with the publish path.  Past it, claimed ≤ claim_limit rows
-        # → read ONLY their seen buckets (O(claim) I/O, not O(seen); the
-        # claimed df is checkpointed, so the footprint collect is a bounded
-        # scan of materialized rows, and only bucket ids reach the driver).
+        # → read ONLY their seen buckets (O(claim) I/O, not O(seen)).
+        seen, _ = self._expired_seen(b, claimed if prune_seen else None)
+        return Claim(claimed, seen, prune_seen)
+
+    def _fetch_route(
+        self, b: int, claim: Claim, robots_lookup: DataFrame | None
+    ) -> DataFrame:
+        """A2 (+A3's body writes): claim-time drops, the pluggable fetch, the
+        status-driven route chain and the extraction UDF, materialized once."""
         # The fetcher is pluggable behind one contract (plans/fetch.py):
         # TableFetcher joins the synthetic web (tests/bench), HttpFetcher
-        # does real paced GETs inside applyInPandas — the route chain below
-        # is driven purely by the returned status, so both paths exercise
-        # the identical downstream plan (crawler.go:84-109 status routing).
-        seen_small = None
-        if prune_seen and self.buckets_stamped:
-            claim_sb = sorted(
-                int(r["sb"])
-                for r in claimed.select(self._seen_bucket_of(claimed).alias("sb"))
-                .distinct()
-                .collect()
-            )
-            seen_cl = expire_seen(
-                self.catalog.read_buckets("seen", claim_sb, S.SEEN_SCHEMA),
-                b,
-                self.ttl_batches,
-            )
-        elif prune_seen:
-            # big seen table on an UNSTAMPED legacy catalog: the physical
-            # bucket geometry is unverified, so bucketed reads could miss
-            # rows — full scan (correct for any geometry) until
-            # migrate_buckets() stamps it
-            seen_cl = expire_seen(
-                self.catalog.read("seen", S.SEEN_SCHEMA), b, self.ttl_batches
-            )
-        else:
-            seen_small = expire_seen(
-                self.catalog.read("seen", S.SEEN_SCHEMA), b, self.ttl_batches
-            )
-            seen_cl = seen_small
-        state_lkp = seen_cl.select("url_canon", F.col("state").alias("crawl_count"))
-        # ---- live robots.txt (optional, HttpFetcher deployments) -------------
-        # one GET of /robots.txt per host per robots_ttl_batches, executed on
-        # executors via mapInPandas and committed into the `robots` catalog
-        # table with this batch's atomic commit; enforcement below is a
-        # columnar host-join + exists(prefix) on top of the always-applied
-        # static config rules.  Off by default (config-only path unchanged).
-        robots_merge = None
-        robots_delays_merge = None
-        robots_lookup = None
-        sitemap_candidates = None
-        if self.fetch_robots:
-            from govuk_crawler_worker_spark.plans.robots import (
-                ROBOTS_SCHEMA,
-                RULES_TYPE,
-                fetch_robots_delta,
-                robots_unreachable_col,
-            )
-
-            # bucket-pruned rules read: only the CLAIMED hosts' robots
-            # buckets move (O(claim), not O(hosts-ever-crawled) — the same
-            # discipline as the seen reads); bounded bucket-id collect only
-            claim_rb = sorted(
-                int(r["rb"])
-                for r in claimed.select(
-                    F.pmod(F.xxhash64("host"), F.lit(ROBOTS_BUCKETS)).alias("rb")
-                )
-                .distinct()
-                .collect()
-            )
-            robots_tbl = self.catalog.read_buckets("robots", claim_rb, ROBOTS_SCHEMA)
-            stale = (
-                claimed.groupBy("host")
-                .agg(F.min("url").alias("u0"))
-                .select(
-                    "host",
-                    F.coalesce(
-                        F.parse_url(F.col("u0"), F.lit("PROTOCOL")), F.lit("https")
-                    ).alias("scheme"),
-                )
-                .join(
-                    robots_tbl.select("host", F.col("fetched_batch").alias("_fb")),
-                    "host",
-                    "left",
-                )
-                .where(
-                    F.col("_fb").isNull()
-                    | (F.col("_fb") <= F.lit(b - self.robots_ttl_batches))
-                )
-                .select("host", "scheme")
-            )
-            # eager: side-effecting GETs run exactly once (the page-fetch rule)
-            raw_delta = fetch_robots_delta(
-                stale,
-                self.fetcher.opener,
-                getattr(self.fetcher, "_headers", lambda h: {}),
-                getattr(self.fetcher, "timeout_s", 10.0),
-                b,
-            ).localCheckpoint(eager=True)
-            # bounded collect: one row per touched robots bucket (≤ claim's
-            # distinct hosts), doubling as the empty-delta check and carrying
-            # the did-any-fresh-robots-declare-sitemaps bit (same single job)
-            rb_info = (
-                raw_delta.select(
-                    F.pmod(F.xxhash64("host"), F.lit(ROBOTS_BUCKETS)).alias("rb"),
-                    (
-                        (F.col("fstatus") >= 200)
-                        & (F.col("fstatus") < 300)
-                        & (F.size("sitemaps") > 0)
-                    ).alias("sm"),
-                )
-                .groupBy("rb")
-                .agg(F.max("sm").alias("sm"))
-                .collect()
-            )
-            rb_buckets = sorted(int(r["rb"]) for r in rb_info)
-            any_sitemaps = any(bool(r["sm"]) for r in rb_info)
-            if rb_buckets:
-                # RFC 9309 §2.3.1: a definitive 4xx is allow-all (absent
-                # file), but an UNREACHABLE robots.txt (5xx / redirect /
-                # transport error) must not replace known rules with
-                # allow-all — carry the host's stored rules (and legacy
-                # prefixes) forward under the new fetched_batch (retry next
-                # TTL); with no stored row, assume complete disallow.
-                unreachable = robots_unreachable_col()
-                # Unreachable rows are stamped with an EARLIER fetched_batch
-                # so the next claim of the host retries the fetch after a
-                # short window (ttl/8) instead of serving the carried-forward
-                # verdict (complete disallow on first contact!) for a full
-                # TTL — RFC 9309 only requires the disallow WHILE unreachable.
-                retry_stamp = F.lit(
-                    b - self.robots_ttl_batches + self.robots_retry_batches
-                ).cast("long")
-                old = robots_tbl.select(
-                    "host",
-                    F.col("prefixes").alias("_op"),
-                    F.col("rules").alias("_or"),
-                    F.col("crawl_delay").alias("_od"),
-                    F.col("sitemaps").alias("_osm"),
-                    F.col("fetched_batch").alias("_ofb"),
-                    F.col("unreachable").alias("_ou"),
-                )
-                has_old = F.col("_ofb").isNotNull()
-                disallow_all = F.expr(
-                    "array(named_struct('rx', '^/', 'n', 1, 'allow', false))"
-                )
-                robots_delta = raw_delta.join(old, "host", "left").select(
-                    "host",
-                    "scheme",
-                    F.when(unreachable & has_old, F.col("_op"))
-                    .otherwise(F.lit(None).cast("array<string>"))
-                    .alias("prefixes"),
-                    F.when(unreachable & has_old, F.col("_or"))
-                    .when(unreachable, disallow_all)
-                    .otherwise(F.col("rules"))
-                    .cast(RULES_TYPE)
-                    .alias("rules"),
-                    F.when(unreachable & has_old, F.col("_od"))
-                    .otherwise(F.col("crawl_delay"))
-                    .alias("crawl_delay"),
-                    F.when(unreachable & has_old, F.col("_osm"))
-                    .otherwise(F.col("sitemaps"))
-                    .alias("sitemaps"),
-                    F.when(unreachable, retry_stamp)
-                    .otherwise(F.col("fetched_batch"))
-                    .alias("fetched_batch"),
-                    # True ⟺ the verdict is the ASSUMED disallow-all of an
-                    # unreachable contact with NO real stored rules behind
-                    # it (carried-forward real rules keep ordinary-drop
-                    # semantics; the stored flag rides along so a host first
-                    # seen unreachable stays retryable until a 2xx/4xx)
-                    F.when(
-                        unreachable, F.coalesce(F.col("_ou"), ~has_old)
-                    )
-                    .otherwise(F.lit(False))
-                    .alias("unreachable"),
-                )
-                rb_bucket_of = lambda df: F.pmod(  # noqa: E731
-                    F.xxhash64(F.col("host")), F.lit(ROBOTS_BUCKETS)
-                )
-                robots_merge = dict(
-                    delta=robots_delta,
-                    key="host",
-                    bucket_of=rb_bucket_of,
-                    touched=rb_buckets,
-                )
-                # Crawl-delay side table: ONLY hosts declaring a delay live
-                # here (tiny at any scale → broadcastable into the claim's
-                # politeness window); refreshed hosts that dropped their
-                # delay are deleted so the table never over-blocks
-                robots_delays_merge = dict(
-                    delta=robots_delta.where(
-                        F.col("crawl_delay").isNotNull()
-                    ).select("host", "crawl_delay"),
-                    deletes=robots_delta.where(
-                        F.col("crawl_delay").isNull()
-                    ).select("host"),
-                    key="host",
-                    bucket_of=rb_bucket_of,
-                    touched=rb_buckets,
-                )
-                robots_lookup = (
-                    robots_tbl.join(robots_delta.select("host"), "host", "left_anti")
-                    .unionByName(robots_delta)
-                    .select("host", "prefixes", "rules", "unreachable")
-                )
-                if any_sitemaps:
-                    # Sitemap ingestion (r6): sitemaps declared by FRESHLY
-                    # fetched robots.txt files are GET'd once per robots TTL
-                    # (executor-side, exactly-once via eager checkpoint —
-                    # the page-fetch rule), <loc> entries extracted, one
-                    # bounded nested level (sitemap indexes) followed, and
-                    # the page URLs fed into THIS batch's publish stage —
-                    # where the normal host-whitelist / blacklist /
-                    # param-gate / seen-dedup gates apply, so a TTL refresh
-                    # re-listing known URLs is anti-joined away for free.
-                    from govuk_crawler_worker_spark.plans.robots import (
-                        fetch_sitemap_locs_delta,
-                    )
-
-                    _sm_args = (
-                        self.fetcher.opener,
-                        getattr(self.fetcher, "_headers", lambda h: {}),
-                        getattr(self.fetcher, "timeout_s", 10.0),
-                    )
-                    sm_urls = (
-                        raw_delta.where(
-                            (F.col("fstatus") >= 200) & (F.col("fstatus") < 300)
-                        )
-                        .select(F.explode("sitemaps").alias("sm_url"))
-                        .distinct()
-                    )
-                    locs = fetch_sitemap_locs_delta(
-                        sm_urls, *_sm_args
-                    ).localCheckpoint(eager=True)
-                    nested = locs.where(F.col("is_xml")).select(
-                        F.col("loc").alias("sm_url")
-                    ).distinct()
-                    if nested.count() > 0:  # cheap: locs is checkpointed
-                        locs = locs.unionByName(
-                            fetch_sitemap_locs_delta(
-                                nested, *_sm_args
-                            ).localCheckpoint(eager=True)
-                        )
-                    sitemap_candidates = locs.where(~F.col("is_xml")).select(
-                        F.col("sm_url").alias("src"), F.col("loc").alias("url")
-                    )
-            else:
-                robots_lookup = robots_tbl.select(
-                    "host", "prefixes", "rules", "unreachable"
-                )
-        # NB: transformation chains here are batched into few select() calls —
-        # every withColumn re-analyzes the whole growing plan through py4j,
-        # and at the BFS floor that driver-side chatter is ~0.4s/batch.
-        pre_enriched = claimed.join(state_lkp, "url_canon", "left").fillna(
+        # does real paced GETs inside applyInPandas — the route chain is
+        # driven purely by the returned status, so both paths exercise the
+        # identical downstream plan (crawler.go:84-109 status routing).
+        cfg, u = self.config, self.udfs
+        state_lkp = claim.seen.select(
+            "url_canon", F.col("state").alias("crawl_count")
+        )
+        # NB: transformation chains here are batched into few select() calls
+        # — every withColumn re-analyzes the whole growing plan through
+        # py4j, and at the BFS floor that driver-side chatter is ~0.4s/batch.
+        pre_enriched = claim.claimed.join(state_lkp, "url_canon", "left").fillna(
             {"crawl_count": 0}
         )
         robots_col = robots_disallowed_col(cfg)
+        # a block backed only by an UNREACHABLE robots fetch (assumed
+        # disallow-all, no real rules) is retryable, not a drop
+        unreachable_col = F.lit(False)
         if robots_lookup is not None:
-            from govuk_crawler_worker_spark.plans.robots import robots_blocked_col
-
             # no forced broadcast: the lookup is already bucket-pruned to the
             # claim's hosts' buckets, and AQE picks broadcast when it is small
             pre_enriched = pre_enriched.join(robots_lookup, "host", "left")
             robots_col = robots_col | robots_blocked_col(
                 F.col("rules"), F.col("prefixes")
             )
+            unreachable_col = F.coalesce(F.col("unreachable"), F.lit(False))
         enriched = pre_enriched.select(
             "*",
             # claim-time blacklist re-check (ReadFromQueue drops
@@ -976,13 +868,7 @@ class DrainLoop:
             # robots.txt disallow rules (north-rule politeness; columnar
             # prefix predicate, no UDF) — dropped like blacklist, pre-fetch
             robots_col.alias("robots_blocked"),
-            # a block backed only by an UNREACHABLE robots fetch (assumed
-            # disallow-all, no real rules) is retryable, not a drop
-            (
-                F.coalesce(F.col("unreachable"), F.lit(False))
-                if robots_lookup is not None
-                else F.lit(False)
-            ).alias("robots_unreachable"),
+            unreachable_col.alias("robots_unreachable"),
         )
         if robots_lookup is not None:
             enriched = enriched.drop("prefixes", "rules", "unreachable")
@@ -992,6 +878,7 @@ class DrainLoop:
         pacing_cols = [
             c for c in ("salt", "fetch_seq", "fetch_offset_s") if c in fetched_raw.columns
         ]
+        redirect = F.col("status").isin(*REDIRECT_STATUSES)
         route_col = (
             # blacklist drop FIRST (ReadFromQueue runs before CrawlURL):
             # acked away — no fetch, no dead record, no seen write
@@ -1010,7 +897,7 @@ class DrainLoop:
             .when(F.col("status").isNull(), "not_found")
             .when(F.col("status") == 429, "requeue_429")
             .when((F.col("status") >= 500) & (F.col("status") < 600), "requeue_5xx")
-            .when(F.col("status").isin(*REDIRECT_STATUSES), "fetch_html")
+            .when(redirect, "fetch_html")
             .when(F.col("status") >= 400, "not_found")
             # null-safe: a 2xx with NULL/unparsable Content-Type is NOT
             # accepted (sim: accepted_content_type(None) → False → reset;
@@ -1023,12 +910,10 @@ class DrainLoop:
             .otherwise("fetch_other")
         )
         body_col = F.when(
-            F.col("status").isin(*REDIRECT_STATUSES),
+            redirect,
             F.concat(F.lit('<a href="'), F.col("redirect_to"), F.lit('">moved</a>')),
         ).otherwise(F.col("body_html"))
-        eff_ct_col = F.when(
-            F.col("status").isin(*REDIRECT_STATUSES), F.lit(ct.HTML)
-        ).otherwise(F.col("content_type"))
+        eff_ct_col = F.when(redirect, F.lit(ct.HTML)).otherwise(F.col("content_type"))
         routed = fetched_raw.drop(*pacing_cols).select(
             "*",
             route_col.alias("route"),
@@ -1056,7 +941,7 @@ class DrainLoop:
             routed = routed.mapInPandas(
                 make_body_writer(self.mirror_root), routed.schema
             )
-        routed = (
+        return (
             routed.drop("body", "body_html")
             # Materialize the batch once (reused 6×).  localCheckpoint beats
             # persist() here (measured ~20% on the BFS floor: every one of
@@ -1064,25 +949,23 @@ class DrainLoop:
             # checkpoint is a plain local RDD).  Eagerness depends on the
             # fetcher contract: a PURE fetcher (TableFetcher — the fetch is
             # a join) may be re-executed, so the checkpoint stays LAZY and
-            # the first action (the combined stats collect below, or the
-            # bloom probe's candidate checkpoint) materializes it — no
-            # dedicated checkpoint job pays this host's ~0.2s fixed job
-            # round trip.  A SIDE-EFFECTING fetcher (HttpFetcher, or any
-            # fetcher not declaring ``pure = True``) must checkpoint
-            # EAGERLY: the first materializing action can be a single job
-            # whose DAG reaches routed through two independent branches
-            # (e.g. the fused stats collect reads routed directly AND via
-            # the lazily-checkpointed inserts), and Spark schedules
-            # independent stages concurrently with no exactly-once guarantee
-            # on un-materialized cached blocks — a lazy checkpoint could
-            # compute a routed partition twice, i.e. duplicate HTTP GETs.
+            # the first action (the combined stats collect, or the bloom
+            # probe's candidate checkpoint) materializes it — no dedicated
+            # checkpoint job pays this host's ~0.2s fixed job round trip.
+            # A SIDE-EFFECTING fetcher (HttpFetcher, or any fetcher not
+            # declaring ``pure = True``) must checkpoint EAGERLY: the first
+            # materializing action can be a single job whose DAG reaches
+            # routed through two independent branches (e.g. the fused stats
+            # collect reads routed directly AND via the lazily-checkpointed
+            # inserts), and Spark schedules independent stages concurrently
+            # with no exactly-once guarantee on un-materialized cached
+            # blocks — a lazy checkpoint could compute a routed partition
+            # twice, i.e. duplicate HTTP GETs.
             .localCheckpoint(eager=not getattr(self.fetcher, "pure", False))
         )
 
-        stats.stage_ms["crawl_url"] = (time.monotonic() - stage_t) * 1000
-        stage_t = time.monotonic()
-
-        # ---- A3: mirror sink (fetched) --------------------------------------
+    def _fetched_rows(self, b: int, routed: DataFrame) -> DataFrame:
+        """A3: the fetched-table rows (mirror sink) of this batch."""
         fetch_rows = routed.where(F.col("route").isin("fetch_html", "fetch_other"))
         fetched_new = fetch_rows.where(~F.col("has_params")).select(
             "url",
@@ -1110,19 +993,16 @@ class DrainLoop:
             fetched_new = fetched_new.mapInPandas(
                 make_payload_writer(self.mirror_root), fetched_new.schema
             )
-        stats.stage_ms["write_to_disk"] = (time.monotonic() - stage_t) * 1000
-        stage_t = time.monotonic()
+        return fetched_new
 
-        # ---- A4: extraction (already computed in the routed pass) -----------
-        html_rows = routed.where(F.col("route") == "fetch_html")
-        extract_dead = html_rows.where(F.col("ex.error")).select(
-            "url",
-            "url_canon",
-            F.lit("extract_error").alias("reason"),
-            F.lit(b).cast("long").alias("batch_id"),
-        )
+    def _extract(
+        self, routed: DataFrame, sitemap_candidates: DataFrame | None
+    ) -> DataFrame:
+        """A4: the (src, url) outlinks extracted in the routed pass + sitemaps."""
+        u = self.udfs
         candidates = (
-            html_rows.where(~F.col("ex.error"))
+            routed.where(F.col("route") == "fetch_html")
+            .where(~F.col("ex.error"))
             .select(F.col("url").alias("src"), F.explode("ex.urls").alias("url"))
         )
         if sitemap_candidates is not None:
@@ -1134,10 +1014,14 @@ class DrainLoop:
                     u["allowed_host"]("url") & ~u["is_blacklisted"]("url")
                 )
             )
-        stats.stage_ms["extract_urls"] = (time.monotonic() - stage_t) * 1000
-        stage_t = time.monotonic()
+        return candidates
 
-        # ---- A5: publish (dedup = bloom pre-filter + exact anti-join) -------
+    def _publish(
+        self, bt: Batch, claim: Claim, routed: DataFrame, candidates: DataFrame
+    ) -> Published:
+        """A5: param gate → canonicalize → bloom pre-filter → exact anti-join
+        vs seen → frontier inserts, then the fused stats collect."""
+        u, b = self.udfs, bt.b
         cands = (
             candidates.where(u["publish_param_gate"]("url"))
             .withColumn("url_canon", u["canonicalize"]("url"))
@@ -1155,17 +1039,15 @@ class DrainLoop:
         # the publish-phase Get in the reference's per-message timeline; our
         # batch semantics preserve that: apply the claim delta BEFORE the
         # publish dedup check (so a reset-to-0 URL republishes same-batch).
-        claim_delta = routed.where(F.col("route") == "requeue_5xx").select(
-            "url_hash",
-            "url_canon",
-            (F.col("crawl_count") + 1).cast("int").alias("state"),
-            F.lit(b).cast("long").alias("updated_batch"),
+        claim_delta = seen_rows(
+            routed.where(F.col("route") == "requeue_5xx"),
+            (F.col("crawl_count") + 1).cast("int"),
+            b,
         ).unionByName(
-            routed.where(F.col("route") == "reset").select(
-                "url_hash",
-                "url_canon",
-                F.lit(S.STATE_READY_TO_ENQUEUE).alias("state"),
-                F.lit(b).cast("long").alias("updated_batch"),
+            seen_rows(
+                routed.where(F.col("route") == "reset"),
+                F.lit(S.STATE_READY_TO_ENQUEUE),
+                b,
             )
         )
         # Publish-dedup strategy switch, Catalyst-style (PLANS.md §2):
@@ -1181,45 +1063,29 @@ class DrainLoop:
         #   seen ≥ bloom_min_seen, no bloom→ bucketed anti-join for ALL
         #                                    candidates (same plan, no filter)
         # NOTHING is collected on any path except bounded bucket-id lists.
-        probe_view = bloom_rows = bloom_meta = None
-        bloom_rebuilt, bloom_touched = False, None
-        if self.use_bloom and seen_size >= self.bloom_min_seen:
-            probe_view, bloom_rows, bloom_meta, bloom_rebuilt = self._bloom_for_batch(
-                b, prev_meta
-            )
-        if probe_view is not None:
-            nb, k = bloom_meta["n_bits"], bloom_meta["k"]
-            segs = int(bloom_meta.get("segments", BLOOM_SEGMENTS))
+        bloom = None
+        if self.use_bloom and claim.prune_seen:
+            bloom = BloomState(*self._bloom_for_batch(b, bt.prev_meta))
             cands = bloom_probe_join(
-                cands, probe_view, "url_hash", segs, nb, k
+                cands, bloom.probe, "url_hash", *bloom.geometry
             ).localCheckpoint(eager=False)  # materialized by the bucket collect
             # bloom-negative → certainly new (no false negatives: the filter
             # covers every committed seen row): skip the join entirely
             certainly_new = cands.where(~F.col("maybe_seen")).drop("maybe_seen")
             maybe = cands.where(F.col("maybe_seen")).drop("maybe_seen")
-            confirmed_new = self._anti_join_seen_bucketed(maybe, b, claim_delta)
-            new_urls = certainly_new.unionByName(confirmed_new)
-        elif seen_size < self.bloom_min_seen:
-            # seen_small: the same broadcast-sized scan the claim gate used
-            enqueued_seen = (
-                seen_merge(seen_small, claim_delta)
-                .where(F.col("state") >= S.STATE_ENQUEUED)
-                .select("url_canon")
+            new_urls = certainly_new.unionByName(
+                self._anti_join_seen(maybe, b, claim_delta)
             )
-            new_urls = cands.join(
-                enqueued_seen.hint("broadcast"), "url_canon", "left_anti"
-            )
-            if self.debug_capture_plans:
-                self.debug_plans["publish_dedup"] = (
-                    new_urls._jdf.queryExecution().executedPlan().toString()
-                )
+        elif not claim.prune_seen:
+            # the same broadcast-sized seen scan the claim gate used
+            new_urls = self._anti_join_seen(cands, b, claim_delta, claim.seen)
         else:
             # bloom disabled but the seen table is past broadcast size:
             # materialize the candidates (via the bucket collect), then
             # bucket-wise exact anti-join
-            cands = cands.localCheckpoint(eager=False)
-            new_urls = self._anti_join_seen_bucketed(cands, b, claim_delta)
-
+            new_urls = self._anti_join_seen(
+                cands.localCheckpoint(eager=False), b, claim_delta
+            )
         inserts = (
             new_urls.select(
                 "url",
@@ -1238,27 +1104,43 @@ class DrainLoop:
             # lazy like routed: the combined collect below materializes it
             .localCheckpoint(eager=False)
         )
+        publish_delta = seen_rows(inserts, F.lit(S.STATE_ENQUEUED), b)
+        # one upsert set for the bucketed seen commit: publish wins over
+        # claim on the same canon (a reset row republished same-batch ends
+        # Enqueued)
+        seen_delta = claim_delta.join(
+            publish_delta.select("url_canon").hint("broadcast"),
+            "url_canon",
+            "left_anti",
+        ).unionByName(publish_delta)
+        pub = Published(inserts, seen_delta, bloom)
+        self._collect_counts(bt.stats, routed, pub)
+        return pub
+
+    def _collect_counts(self, stats: BatchStats, routed: DataFrame, pub: Published):
+        """The fused stats collect: fills ``stats`` and ``pub``'s facts."""
         # ONE bounded aggregation job covers all per-route stats, every
         # bucket footprint the commit needs (frontier deletes/requeues per
-        # bucket, claim-delta seen buckets, per-priority-bucket claim
-        # counts) AND the published inserts' counts+footprints — two collect
-        # jobs fused into one driver round trip (the BFS floor is fixed
-        # per-job latency, ~0.1-0.3 s each on this host).  Every consumer
-        # below uses only MARGINALS (per-route flags, per-route fb, per-route
-        # sb — never an sb×fb pairing), so each input aggregates by GROUPING
-        # SETS: one scan per input, Expand fans each row into its 2-3
-        # marginal groups with map-side partial aggregation, and the collect
-        # is bounded by O(routes × (sb_buckets + fb_buckets)) ints — NOT the
-        # O(routes × sb × fb) cross product, which at a production
-        # deployment (O(1000)-bucket tables, 10^6-row claims) would approach
-        # a 10^6-row driver collect per batch.  Never row data.  Both inputs
-        # are checkpointed, so this re-scans materialized rows only.
+        # bucket, claim-delta seen buckets, per-priority-bucket claim counts)
+        # AND the published inserts' counts+footprints — two collect jobs
+        # fused into one driver round trip (the BFS floor is fixed per-job
+        # latency, ~0.1-0.3 s each on this host).
+        # Every consumer below uses only MARGINALS (per-route flags,
+        # per-route fb, per-route sb — never an sb×fb pairing), so each input
+        # aggregates by GROUPING SETS: one scan per input, Expand fans each
+        # row into its 2-3 marginal groups with map-side partial aggregation,
+        # and the collect is bounded by O(routes × (sb_buckets + fb_buckets))
+        # ints — NOT the O(routes × sb × fb) cross product, which at a
+        # production deployment (O(1000)-bucket tables, 10^6-row claims)
+        # would approach a 10^6-row driver collect per batch.  Never row
+        # data.  Both inputs are checkpointed, so this re-scans materialized
+        # rows only.
         # grouping_id values: bit i set ⟺ grouping column i aggregated away
         # (column order below), so (route,exerr,hp) → 0b00011 = 3,
         # (route,fb) → 0b01101 = 13, (route,sb) → 0b01110 = 14; for the
         # insert side's (sb, fb): (sb) → 1, (fb) → 2.
         GID_R_FLAGS, GID_R_FB, GID_R_SB = 3, 13, 14
-        GID_I_SB, GID_I_FB = 1, 2
+        GID_I_SB = 1
         rc_agg = (
             routed.select(
                 "route",
@@ -1278,9 +1160,9 @@ class DrainLoop:
             .agg(F.count(F.lit(1)).alias("n"), F.grouping_id().alias("gid"))
         )
         ins_agg = (
-            inserts.select(
-                self._seen_bucket_of(inserts).alias("sb"),
-                self._frontier_bucket_of(inserts).alias("fb"),
+            pub.inserts.select(
+                self._seen_bucket_of(pub.inserts).alias("sb"),
+                self._frontier_bucket_of(pub.inserts).alias("fb"),
             )
             .groupingSets([["sb"], ["fb"]], "sb", "fb")
             .agg(F.count(F.lit(1)).alias("n"), F.grouping_id().alias("gid"))
@@ -1298,136 +1180,97 @@ class DrainLoop:
             ins_agg.withColumn("tag", F.lit("i"))
         ).collect()
         stats.stats_rows = len(counts)
-
-        route_counts: dict[str, int] = {}
-        n_extract_err = n_fetch_rows = 0
-        claimed_pb: dict[int, int] = {}
-        requeued_pb: dict[int, int] = {}
-        delete_fb: set[int] = set()
-        claim_delta_sb: set[int] = set()
-        insert_sb: set[int] = set()
-        insert_fb: set[int] = set()
-        stats.published = 0
+        routes = pub.routes
         for r in counts:
             n = int(r["n"])
             gid = int(r["gid"])
             if r["tag"] == "i":
                 if gid == GID_I_SB:
                     stats.published += n
-                    insert_sb.add(int(r["sb"]))
-                else:  # GID_I_FB
-                    insert_fb.add(int(r["fb"]))
+                    pub.seen_touched.add(int(r["sb"]))
+                else:  # (fb)
+                    pub.frontier_touched.add(int(r["fb"]))
                 continue
             route = r["route"]
             if gid == GID_R_FLAGS:
-                route_counts[route] = route_counts.get(route, 0) + n
+                routes[route] = routes.get(route, 0) + n
                 if route == "fetch_html" and r["exerr"]:
-                    n_extract_err += n
+                    pub.extract_errors += n
                 if route in ("fetch_html", "fetch_other") and not r["hp"]:
-                    n_fetch_rows += n
+                    pub.fetch_rows += n
             elif gid == GID_R_FB:
                 fb = int(r["fb"])
                 pb = fb // self.frontier_host_buckets
-                delete_fb.add(fb)
-                claimed_pb[pb] = claimed_pb.get(pb, 0) + n
-                if route in ("requeue_429", "requeue_5xx", "requeue_robots"):
-                    # a requeue keeps its priority and host → same frontier
-                    # bucket
-                    requeued_pb[pb] = requeued_pb.get(pb, 0) + n
+                pub.frontier_touched.add(fb)
+                # a claimed row leaves its bucket; a requeue keeps its
+                # priority and host → same frontier bucket
+                if route not in REQUEUE_ROUTES:
+                    pub.pb_delta[pb] = pub.pb_delta.get(pb, 0) - n
             elif gid == GID_R_SB and route in ("requeue_5xx", "reset"):
-                claim_delta_sb.add(int(r["sb"]))
-        stats.claimed = sum(route_counts.values())
-        stats.requeued = (
-            route_counts.get("requeue_429", 0)
-            + route_counts.get("requeue_5xx", 0)
-            + route_counts.get("requeue_robots", 0)
-        )
-        stats.dead = route_counts.get("gate_dead", 0) + route_counts.get("not_found", 0)
-        stats.fetched = route_counts.get("fetch_html", 0) + route_counts.get(
-            "fetch_other", 0
-        )
-        stats.stage_ms["publish_urls"] = (time.monotonic() - stage_t) * 1000
-        stage_t = time.monotonic()
+                pub.seen_touched.add(int(r["sb"]))
+        stats.claimed = sum(routes.values())
+        stats.requeued = sum(routes.get(r, 0) for r in REQUEUE_ROUTES)
+        stats.dead = routes.get("gate_dead", 0) + routes.get("not_found", 0)
+        stats.fetched = routes.get("fetch_html", 0) + routes.get("fetch_other", 0)
 
-        # ---- seen delta (MERGE) ---------------------------------------------
-        publish_delta = inserts.select(
-            "url_hash",
-            "url_canon",
-            F.lit(S.STATE_ENQUEUED).alias("state"),
-            F.lit(b).cast("long").alias("updated_batch"),
-        )
-        # one upsert set for the bucketed commit: publish wins over claim on
-        # the same canon (a reset row republished same-batch ends Enqueued)
-        seen_delta = claim_delta.join(
-            publish_delta.select("url_canon").hint("broadcast"),
-            "url_canon",
-            "left_anti",
-        ).unionByName(publish_delta)
-
-        # ---- bloom delta fold (O(delta), commit-side) -----------------------
-        # OR this batch's seen delta into the filter as part of the atomic
-        # commit (see _bloom_for_batch): the fold's only input is the delta
-        # itself — never a scan of the seen table — so filter maintenance
-        # I/O is bounded by the batch, not by history.  Counts are already
-        # known from the marginal stats collect, so an empty delta skips
-        # every bloom job (the watermark still advances: nothing new to
-        # cover).
-        if bloom_meta is not None:
-            n_seen_delta = (
-                stats.published
-                + route_counts.get("requeue_5xx", 0)
-                + route_counts.get("reset", 0)
-            )
-            if n_seen_delta > 0:
-                nb_, k_ = bloom_meta["n_bits"], bloom_meta["k"]
-                partials = bloom_partials(
-                    seen_delta,
-                    "url_hash",
-                    int(bloom_meta.get("segments", BLOOM_SEGMENTS)),
-                    nb_,
-                    k_,
+    def _fold_bloom(self, b: int, pub: Published) -> None:
+        """Bloom delta fold (O(delta), commit-side): OR this batch's seen
+        delta into the filter as part of the atomic commit."""
+        # See _bloom_for_batch: the fold's only input is the delta itself —
+        # never a scan of the seen table — so filter maintenance I/O is
+        # bounded by the batch, not by history.  Counts are already known
+        # from the marginal stats collect, so an empty delta skips every
+        # bloom job (the watermark still advances: nothing new to cover).
+        bloom = pub.bloom
+        if bloom is None:
+            return
+        if pub.seen_touched:  # the seen delta has rows
+            partials = bloom_partials(pub.seen_delta, "url_hash", *bloom.geometry)
+            if bloom.rebuilt:
+                # the rebuild rows (full replace) cover history through b-1:
+                # OR the delta in, carrying untouched segments
+                folded = bloom_or_merge(bloom.rows, partials)
+                bloom.rows = (
+                    bloom.rows.join(folded.select("segment"), "segment", "left_anti")
+                    .unionByName(folded)
+                    .localCheckpoint(eager=True)
                 )
-                if bloom_rebuilt:
-                    # the rebuild rows (full replace) cover history through
-                    # b-1: OR the delta in, carrying untouched segments
-                    folded = bloom_or_merge(bloom_rows, partials)
-                    bloom_rows = (
-                        bloom_rows.join(
-                            folded.select("segment"), "segment", "left_anti"
-                        )
-                        .unionByName(folded)
-                        .localCheckpoint(eager=True)
-                    )
-                else:
-                    # steady state: merge rows for exactly the delta's
-                    # segments against the stored table (probe_view IS the
-                    # stored table here)
-                    bloom_rows = bloom_or_merge(probe_view, partials).localCheckpoint(
-                        eager=True
-                    )
-                    # bounded: ≤ BLOOM_SEGMENTS ints off a checkpointed df —
-                    # lets the commit skip its touched-bucket discovery job
-                    bloom_touched = sorted(
-                        int(r["segment"])
-                        for r in bloom_rows.select("segment").collect()
-                    )
-            elif not bloom_rebuilt:
-                bloom_rows = None  # nothing to write; meta still advances
-            bloom_meta = dict(bloom_meta, wm=b + 1)
+            else:
+                # steady state: merge rows for exactly the delta's segments
+                # against the stored table (the probe view IS the stored
+                # table here)
+                bloom.rows = bloom_or_merge(bloom.probe, partials).localCheckpoint(
+                    eager=True
+                )
+                # bounded: ≤ BLOOM_SEGMENTS ints off a checkpointed df —
+                # lets the commit skip its touched-bucket discovery job
+                bloom.touched = sorted(
+                    int(r["segment"]) for r in bloom.rows.select("segment").collect()
+                )
+        elif not bloom.rebuilt:
+            bloom.rows = None  # nothing to write; meta still advances
+        bloom.meta = dict(bloom.meta, wm=b + 1)
 
-        # ---- dead + requeues + next frontier ---------------------------------
-        dead_new = routed.where(F.col("route").isin("gate_dead", "not_found")).select(
-            "url",
-            "url_canon",
-            F.when(F.col("route") == "gate_dead", "retries_exhausted")
-            .otherwise("not_found")
-            .alias("reason"),
-            F.lit(b).cast("long").alias("batch_id"),
-        ).unionByName(extract_dead)
-
-        requeues = routed.where(
-            F.col("route").isin("requeue_429", "requeue_5xx", "requeue_robots")
-        ).select(
+    def _commit(
+        self, bt: Batch, claim: Claim, routed, fetched_new, pub: Published, robots
+    ) -> None:
+        """A6 + exactly-once: assemble the batch's deltas and write them in
+        ONE atomic commit (ack/reject/publish all-at-once)."""
+        b, stats, prev_meta = bt.b, bt.stats, bt.prev_meta
+        dead_new = dead_rows(
+            routed.where(F.col("route").isin("gate_dead", "not_found")),
+            F.when(F.col("route") == "gate_dead", "retries_exhausted").otherwise(
+                "not_found"
+            ),
+            b,
+        ).unionByName(
+            dead_rows(
+                routed.where(F.col("route") == "fetch_html").where(F.col("ex.error")),
+                F.lit("extract_error"),
+                b,
+            )
+        )
+        requeues = routed.where(F.col("route").isin(*REQUEUE_ROUTES)).select(
             "url",
             "url_canon",
             "url_hash",
@@ -1449,22 +1292,13 @@ class DrainLoop:
             "lineage",
         )
 
-        # frontier becomes a bucketed merge: deletes = every claimed row
-        # (carrying the bucket inputs), upserts = requeues ∪ inserts —
-        # commit I/O touches only those rows' buckets
-        frontier_deletes = routed.select("url_canon", "priority_bucket", "host")
-        frontier_delta = requeues.unionByName(inserts)
-
-        # ---- metrics (B30 StatsD labels) --------------------------------------
-        # buffered driver-side, flushed every METRICS_FLUSH_BATCHES commits
-        # (+ drain-end flush)
+        # metrics (B30 StatsD labels): buffered driver-side, flushed every
+        # METRICS_FLUSH_BATCHES commits (+ drain-end flush)
         stats.stage_ms["read_from_queue"] = 0.0  # folded into claim/crawl_url
         self._pending_metrics.extend(
             (b, stage, float(ms), int(stats.claimed), 0)
             for stage, ms in stats.stage_ms.items()
         )
-
-        # ---- per-batch payload validation (north rule) ------------------------
         # skip appends that would write empty tables (counts already known —
         # saves 1-2 write jobs per batch in the BFS tail)
         appends = {}
@@ -1473,27 +1307,26 @@ class DrainLoop:
                 self._pending_metrics, S.METRICS_SCHEMA
             )
             self._pending_metrics = []
-        if n_fetch_rows > 0:
+        if pub.fetch_rows > 0:
             appends["fetched"] = fetched_new
-        if stats.dead + n_extract_err > 0:
+        if stats.dead + pub.extract_errors > 0:
             appends["dead"] = dead_new
-        if self.validate_payload and n_fetch_rows > 0:
+        if self.origin is not None and pub.fetch_rows > 0:
+            # per-batch payload validation (north rule)
             from govuk_crawler_worker_spark.plans.validate import (
                 validate_fetched_images,
             )
 
-            report = validate_fetched_images(fetched_new, self.origin).withColumn(
-                "batch_id", F.lit(b).cast("long")
-            )
-            appends["validation"] = report
+            appends["validation"] = validate_fetched_images(
+                fetched_new, self.origin
+            ).withColumn("batch_id", F.lit(b).cast("long"))
 
-        # ---- A6 + exactly-once: ONE atomic commit -----------------------------
         # frontier + seen + bloom are bucketed MERGES (per-bucket rewrite,
         # untouched bucket files carried forward as pointers); fetched / dead /
         # metrics are appends — every table's I/O is delta-proportional.
         # touched-bucket sets are already known driver-side (from the route
-        # and insert aggregates above) — passing them lets the commit skip
-        # its touched-bucket discovery job entirely
+        # and insert aggregates) — passing them lets the commit skip its
+        # touched-bucket discovery job entirely.
         # State tables switch to MERGE-ON-READ past the big-state threshold
         # (the same switch that governs the bloom/bucketed-join strategies):
         # a copy-on-write bucket rewrite is O(table)/commit once a
@@ -1507,52 +1340,61 @@ class DrainLoop:
         # tables are broadcast-small and COW rewrites are cheapest.
         mor_frontier = int(prev_meta.get("frontier_size") or 0) >= self.bloom_min_seen
         merges = {
+            # the frontier merge deletes every claimed row (carrying the
+            # bucket inputs) and upserts requeues ∪ inserts — commit I/O
+            # touches only those rows' buckets
             "frontier": dict(
-                delta=frontier_delta,
+                delta=requeues.unionByName(pub.inserts),
                 key="url_canon",
                 bucket_of=self._frontier_bucket_of,
-                deletes=frontier_deletes,
-                touched=sorted(delete_fb | insert_fb),
+                deletes=routed.select("url_canon", "priority_bucket", "host"),
+                touched=sorted(pub.frontier_touched),
                 mor=mor_frontier,
             ),
             "seen": dict(
-                delta=seen_delta,
+                delta=pub.seen_delta,
                 key="url_canon",
                 bucket_of=self._seen_bucket_of,
-                touched=sorted(claim_delta_sb | insert_sb),
-                mor=prune_seen,
+                touched=sorted(pub.seen_touched),
+                mor=claim.prune_seen,
             ),
         }
         if self.mor_max_chain is not None:
             merges["frontier"]["mor_max_chain"] = self.mor_max_chain
             merges["seen"]["mor_max_chain"] = self.mor_max_chain
-        if robots_merge is not None:
-            # freshly fetched robots.txt rules ride the same atomic commit
-            merges["robots"] = robots_merge
-            merges["robots_delays"] = robots_delays_merge
-        if bloom_rows is not None:
+        # freshly fetched robots.txt rules ride the same atomic commit
+        merges.update(robots.merges)
+        bloom = pub.bloom
+        if bloom is not None and bloom.rows is not None:
             merges["bloom"] = dict(
-                delta=bloom_rows,
+                delta=bloom.rows,
                 key="segment",
                 bucket_of=lambda df: F.col("segment"),
             )
-            if bloom_rebuilt:
+            if bloom.rebuilt:
                 # geometry changed (n_bits/k): replace the WHOLE bloom table
                 # so no stale old-geometry segment row survives (a stale row
                 # decoded with the new geometry is garbage bits — and a bloom
                 # false negative would break dedup exactness)
                 merges["bloom"]["_full"] = True
             else:
-                merges["bloom"]["touched"] = bloom_touched
-        prev_n = prev_meta.get("frontier_size", eligible_hint)
-        if prev_n is None:
-            prev_n = self.catalog.read("frontier", S.FRONTIER_SCHEMA).count()
+                merges["bloom"]["touched"] = bloom.touched
+        new_meta = self._next_meta(bt, pub)
+        self.catalog.commit(appends=appends, merges=merges, meta=new_meta)
+        stats.frontier_size = new_meta["frontier_size"]
+
+    def _next_meta(self, bt: Batch, pub: Published) -> dict:
+        """Commit meta after the batch: clock, sizes, pb counts, bloom meta."""
+        prev_meta, stats = bt.prev_meta, bt.stats
         new_meta = dict(prev_meta)
-        new_meta["next_batch"] = b + 1
+        new_meta["next_batch"] = bt.b + 1
         new_meta["frontier_size"] = (
-            int(prev_n) - stats.claimed + stats.requeued + stats.published
+            self.frontier_size(prev_meta, bt.eligible_hint)
+            - stats.claimed
+            + stats.requeued
+            + stats.published
         )
-        new_meta["seen_size"] = seen_size + stats.published
+        new_meta["seen_size"] = int(prev_meta.get("seen_size", 0)) + stats.published
         if prev_meta.get("frontier_pb_counts") is not None:
             # per-priority-bucket counts for the claim-scan pruning: exact
             # delta arithmetic except published (which may upsert a row the
@@ -1563,21 +1405,16 @@ class DrainLoop:
             pbc = {
                 int(k2): int(v) for k2, v in prev_meta["frontier_pb_counts"].items()
             }
-            for pb, n_cl in claimed_pb.items():
-                pbc[pb] = pbc.get(pb, 0) - n_cl
-            for pb, n_rq in requeued_pb.items():
-                pbc[pb] = pbc.get(pb, 0) + n_rq
+            for pb, d in pub.pb_delta.items():
+                pbc[pb] = pbc.get(pb, 0) + d
             if stats.published:
                 pbc[0] = pbc.get(0, 0) + stats.published  # published → priority 0
             new_meta["frontier_pb_counts"] = {
                 str(pb): n2 for pb, n2 in pbc.items() if n2 > 0
             }
-        if bloom_meta is not None:
-            new_meta["bloom"] = bloom_meta
-        self.catalog.commit(appends=appends, merges=merges, meta=new_meta)
-        stats.frontier_size = new_meta["frontier_size"]
-        stats.duration_s = time.monotonic() - t0
-        return stats
+        if pub.bloom is not None:
+            new_meta["bloom"] = pub.bloom.meta
+        return new_meta
 
     # -- maintenance ------------------------------------------------------------
 
@@ -1596,17 +1433,17 @@ class DrainLoop:
         safe for both termination (meta==0 ⇒ empty) and pruning (over-read);
         this periodic reconciliation stops the drift growing without bound
         on long crawls."""
-        rows = (
-            self.catalog.read("frontier", S.FRONTIER_SCHEMA)
-            .groupBy("priority_bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+        frontier = self.catalog.read("frontier", S.FRONTIER_SCHEMA)
+        self.catalog.commit(meta=self._counted_meta(frontier))
+
+    def _counted_meta(self, frontier: DataFrame) -> dict:
+        """The latest commit meta with ``frontier``'s exact row counts."""
+        pb_counts = pb_counts_of(frontier)
+        return dict(
+            self.catalog.latest()["meta"],
+            frontier_size=sum(pb_counts.values()),
+            frontier_pb_counts=pb_counts,
         )
-        pb_counts = {str(int(r["priority_bucket"])): int(r["n"]) for r in rows}
-        new_meta = dict(self.catalog.latest()["meta"])
-        new_meta["frontier_size"] = sum(pb_counts.values())
-        new_meta["frontier_pb_counts"] = pb_counts
-        self.catalog.commit(meta=new_meta)
 
     def migrate_buckets(
         self,
@@ -1625,15 +1462,10 @@ class DrainLoop:
         the counts the constructor REQUESTED (so `DrainLoop(...,
         seen_buckets=128)` on an old catalog migrates to 128 with a bare
         `migrate_buckets()`)."""
-        new_scheme = {
-            "seen": int(seen_buckets or self.requested_bucket_scheme["seen"]),
-            "frontier_host": int(
-                frontier_host_buckets or self.requested_bucket_scheme["frontier_host"]
-            ),
-            "bloom_segments": int(
-                bloom_segments or self.requested_bucket_scheme["bloom_segments"]
-            ),
-        }
+        req = self.requested_bucket_scheme
+        new_scheme = _bucket_scheme(
+            req, seen_buckets, frontier_host_buckets, bloom_segments
+        )
         frontier = self.catalog.read("frontier", S.FRONTIER_SCHEMA).withColumn(
             # recompute the ORDERED priority bucket too — a single migration
             # entry point covers both legacy schemes
@@ -1641,15 +1473,7 @@ class DrainLoop:
             priority_bucket_col(F.col("priority")),
         ).localCheckpoint(eager=True)
         seen = self.catalog.read("seen", S.SEEN_SCHEMA).localCheckpoint(eager=True)
-        pb_rows = (
-            frontier.groupBy("priority_bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        pb_counts = {str(int(r["priority_bucket"])): int(r["n"]) for r in pb_rows}
-        new_meta = dict(self.catalog.latest()["meta"])
-        new_meta["frontier_size"] = sum(pb_counts.values())
-        new_meta["frontier_pb_counts"] = pb_counts
+        new_meta = self._counted_meta(frontier)
         new_meta["pb_scheme"] = PB_SCHEME
         new_meta["bucket_scheme"] = dict(new_scheme)
         new_meta.pop("bloom", None)  # geometry changes → rebuild on demand
@@ -1672,12 +1496,8 @@ class DrainLoop:
             },
             meta=new_meta,
         )
-        self.bucket_scheme = dict(new_scheme)
-        self.seen_buckets = new_scheme["seen"]
-        self.frontier_host_buckets = new_scheme["frontier_host"]
-        self.bloom_segments = new_scheme["bloom_segments"]
+        self._use_bucket_scheme(new_scheme)
         self.buckets_stamped = True
-        self.bucket_scheme_mismatch = self.bucket_scheme != self.requested_bucket_scheme
 
     def compact_seen(self) -> None:
         """Physically reclaim TTL-expired seen rows (the Redis analogue is
@@ -1697,75 +1517,90 @@ class DrainLoop:
 
     # -- the loop ---------------------------------------------------------------
 
+    def frontier_size(self, meta: dict | None = None, known: int | None = None) -> int:
+        """Frontier rows per the commit meta (the latest unless given) — an
+        over-count at worst, trued up by reconcile_frontier() — else
+        ``known``, else one count() (a legacy catalog without the field)."""
+        if meta is None:
+            meta = self.catalog.latest()["meta"]
+        n = meta.get("frontier_size", known)
+        if n is None:
+            n = self.catalog.read("frontier", S.FRONTIER_SCHEMA).count()
+        return int(n)
+
     def drain(self, max_batches: int = 1000, progress=None) -> list[BatchStats]:
         """Iterate batches until the frontier is empty (termination = the
         publish→consume feedback loop has no more work) or the budget runs
         out.  Resumes from the last committed ``next_batch``."""
         out: list[BatchStats] = []
-        meta = self.catalog.latest()["meta"]
-        b = int(meta.get("next_batch", 0))
+        b = int(self.catalog.latest()["meta"].get("next_batch", 0))
         end = b + max_batches
         try:
-            return self._drain(b, end, out, progress)
+            while b is not None and b < end:
+                stats, b = self.step(b)
+                if stats is not None:
+                    out.append(stats)
+                    if progress:
+                        progress(stats)
+            return out
         finally:
             self.flush_metrics()
 
-    def _drain(self, b, end, out, progress):
-        while b < end:
-            meta = self.catalog.latest()["meta"]
-            n = meta.get("frontier_size")
-            if n is None:  # legacy/foreign catalog: count once
-                n = self.catalog.read("frontier", S.FRONTIER_SCHEMA).count()
-            n = int(n)
-            if n == 0:
-                break
-            stats = self.run_batch(b, eligible_hint=n)
-            out.append(stats)
-            if progress:
-                progress(stats)
-            if self.compact_batches and (b + 1) % self.compact_batches == 0:
-                # periodic MOR-chain + physical-TTL compaction (r4 VERDICT
-                # 'missing #3'): folds every seen chain back to a single
-                # base leaf and physically reclaims TTL-expired rows — read
-                # results unchanged (reads already fold + filter), write
-                # amplification bounded between compactions by the inline
-                # chain cap.  compact_seen piggy-backs reconcile_frontier.
-                self.compact_seen()
-            elif (b + 1) % 256 == 0:
-                # bound the (over-count-only) frontier meta drift on long
-                # crawls — one bounded groupBy job every 256 batches
-                self.reconcile_frontier()
-            if (b + 1) % 64 == 0:
-                # reclaim unreachable snapshot files (Iceberg's
-                # expire_snapshots): long drains must not grow disk per
-                # batch; driver-side file ops only, resume unaffected
-                self.catalog.expire_snapshots(keep_last=8)
-            if stats.claimed == 0:
-                # nothing claimed despite a non-empty frontier: either every
-                # row is backed off past b, or (with politeness on) the salted
-                # budget's rotating remainder gave no eligible URL a winning
-                # salt rank THIS batch — e.g. budget=1 over k salt buckets
-                # only claims rank (k - b) % k.  Distinguish via the earliest
-                # not_before (bounded agg, only on this rare path).
-                min_nb = self.catalog.read("frontier", S.FRONTIER_SCHEMA).agg(
-                    F.min("not_before_batch")
-                ).collect()[0][0]
-                if min_nb is None:
-                    break  # frontier actually empty (meta over-count drained)
-                if int(min_nb) > b:
-                    b = int(min_nb)  # all backed off — jump the clock
-                    continue
-                if self._politeness_on() or (
-                    self.fetch_robots and self.catalog.exists("robots_delays")
-                ):
-                    # eligible rows exist but no salt rank won this batch
-                    # (or a live Crawl-delay budget was 0 for every eligible
-                    # host this batch): advance ONE batch (bounded by `end`)
-                    # so the rotating remainder / fairness floor can reach
-                    # the starved URLs — the simulator does exactly this
-                    # (sim.py batch loop never stalls)
-                    b += 1
-                    continue
-                break  # no politeness and nothing claimable: done
-            b += 1
-        return out
+    def step(self, b: int) -> tuple[BatchStats | None, int | None]:
+        """One drain step, shared by the batch and the streaming drain: batch
+        ``b`` if the frontier holds work, the maintenance cadence, then the
+        zero-claim policy.  Returns (stats, the next batch to run); stats is
+        None when the frontier is empty, the next batch None when the drain
+        is done."""
+        n = self.frontier_size()
+        if n == 0:
+            return None, None
+        stats = self.run_batch(b, eligible_hint=n)
+        if self.compact_batches and (b + 1) % self.compact_batches == 0:
+            # periodic MOR-chain + physical-TTL compaction (r4 VERDICT
+            # 'missing #3'): folds every seen chain back to a single base
+            # leaf and physically reclaims TTL-expired rows — read results
+            # unchanged (reads already fold + filter), write amplification
+            # bounded between compactions by the inline chain cap.
+            # compact_seen piggy-backs reconcile_frontier.
+            self.compact_seen()
+        elif (b + 1) % 256 == 0:
+            # bound the (over-count-only) frontier meta drift on long
+            # crawls — one bounded groupBy job every 256 batches
+            self.reconcile_frontier()
+        if (b + 1) % 64 == 0:
+            # reclaim unreachable snapshot files (Iceberg's
+            # expire_snapshots): long drains must not grow disk per batch;
+            # driver-side file ops only, resume unaffected
+            self.catalog.expire_snapshots(keep_last=8)
+        if stats.claimed > 0:
+            return stats, b + 1
+        # nothing claimed despite a non-empty frontier: either every row is
+        # backed off past b, or (with politeness on) the salted budget's
+        # rotating remainder gave no eligible URL a winning salt rank THIS
+        # batch — e.g. budget=1 over k salt buckets only claims rank
+        # (k - b) % k.  Distinguish via the earliest not_before (bounded
+        # agg, only on this rare path).
+        min_nb = (
+            self.catalog.read("frontier", S.FRONTIER_SCHEMA)
+            .agg(F.min("not_before_batch"))
+            .collect()[0][0]
+        )
+        if min_nb is None:
+            # frontier actually empty: the meta over-counted (a TTL-expired
+            # republish upserts an existing row).  True it up to 0, or every
+            # later drain or streaming tick runs one more empty batch.
+            self.reconcile_frontier()
+            return stats, None
+        if int(min_nb) > b:
+            return stats, int(min_nb)  # all backed off — jump the clock
+        if self._politeness_on() or (
+            self.fetch_robots and self.catalog.exists("robots_delays")
+        ):
+            # eligible rows exist but no salt rank won this batch (or a live
+            # Crawl-delay budget was 0 for every eligible host this batch):
+            # advance ONE batch so the rotating remainder / fairness floor
+            # can reach the starved URLs — the simulator does exactly this
+            # (sim.py batch loop never stalls)
+            return stats, b + 1
+        return stats, None  # no politeness and nothing claimable: done

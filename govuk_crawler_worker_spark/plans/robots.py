@@ -36,11 +36,11 @@ Parsing implements RFC 9309 group + rule semantics:
 * fetch-status handling (§2.3.1): 2xx → parse; definitive 4xx → allow-all
   (absent file); 5xx / redirect / transport error → UNREACHABLE: the caller
   carries the host's previously stored rules forward, or assumes complete
-  disallow when there are none (``fstatus`` column + pipeline composition,
-  plans/pipeline.py);
+  disallow when there are none (``fstatus`` column + the composition in
+  :func:`live_robots`);
 * ``Crawl-delay`` (de-facto extension, not in RFC 9309) is parsed with the
   same group selection (most polite value when groups combine) and ENFORCED:
-  the pipeline keeps delayed hosts in a tiny ``robots_delays`` catalog table
+  :func:`live_robots` keeps delayed hosts in a tiny ``robots_delays`` table
   broadcast into the claim's politeness window, where
   :func:`crawl_delay_budget_col` turns the delay into a per-batch budget
   (accumulated-fairness floor — a delay longer than the batch period yields
@@ -57,10 +57,12 @@ via ``startswith`` until their TTL refresh rewrites them as rules.
 from __future__ import annotations
 
 import re as _re
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+ROBOTS_BUCKETS = 64  # live robots.txt rules table, bucketed by host hash
 RULES_TYPE = "array<struct<rx:string,n:int,allow:boolean>>"
 _ROBOTS_BASE = (
     "host string, scheme string, prefixes array<string>, "
@@ -75,7 +77,7 @@ _ROBOTS_BASE = (
 #: unreachable).  Pre-r7 rows read as NULL → treated as ordinary rules.
 ROBOTS_SCHEMA = _ROBOTS_BASE + ", unreachable boolean"
 #: fetch output = base columns + the HTTP status (the unreachable-robots
-#: composition in the pipeline derives ``unreachable`` from it)
+#: composition in live_robots derives ``unreachable`` from it)
 ROBOTS_FETCH_SCHEMA = _ROBOTS_BASE + ", fstatus int"
 
 def _winning_groups(
@@ -274,10 +276,10 @@ def fetch_robots_delta(
     inside mapInPandas (Arrow batches; executors fetch).  ``fstatus`` is the
     HTTP status (−1 for a transport error); rules are parsed only for 2xx —
     the 4xx-allow-all vs unreachable-carry-forward decision is the CALLER's
-    (it needs the previously stored rules; see the pipeline's robots
-    composition).  The caller MUST eagerly checkpoint the result before
-    reusing it (side-effecting GETs must run exactly once, same rule as the
-    page fetch)."""
+    (it needs the previously stored rules; see :func:`live_robots`).  The
+    caller MUST eagerly checkpoint the result before reusing it
+    (side-effecting GETs must run exactly once, same rule as the page
+    fetch)."""
     import pandas as pd
 
     def fetch_part(it):
@@ -370,3 +372,178 @@ def robots_blocked_col(rules_col, legacy_prefixes_col=None, url_col: str = "url"
             lambda p: path.startswith(p),
         )
     return blocked
+
+
+def robots_bucket_of(df=None):
+    """Bucket column of the ``robots`` and ``robots_delays`` tables."""
+    return F.pmod(F.xxhash64(F.col("host")), F.lit(ROBOTS_BUCKETS))
+
+
+@dataclass
+class LiveRobots:
+    """One batch's live robots.txt rules lookup, commit merge specs and
+    sitemap (src, url) candidates; the default is the off state."""
+
+    lookup: DataFrame | None = None
+    merges: dict = field(default_factory=dict)
+    sitemap_candidates: DataFrame | None = None
+
+
+def live_robots(
+    catalog, claimed: DataFrame, fetcher, b: int, ttl_batches: int, retry_batches: int
+) -> LiveRobots:
+    """One GET of /robots.txt per claimed host per ``ttl_batches``, executed
+    on executors via mapInPandas and committed into the ``robots`` catalog
+    table with the batch's atomic commit; the pipeline enforces the returned
+    lookup as a columnar host-join on top of the always-applied static
+    config rules."""
+    fetch_args = (
+        fetcher.opener,
+        getattr(fetcher, "_headers", lambda h: {}),
+        getattr(fetcher, "timeout_s", 10.0),
+    )
+    # bucket-pruned rules read: only the CLAIMED hosts' robots buckets move
+    # (O(claim), not O(hosts-ever-crawled) — the same discipline as the seen
+    # reads); bounded bucket-id collect only
+    claim_rb = sorted(
+        int(r["rb"])
+        for r in claimed.select(robots_bucket_of().alias("rb")).distinct().collect()
+    )
+    robots_tbl = catalog.read_buckets("robots", claim_rb, ROBOTS_SCHEMA)
+    stale = (
+        claimed.groupBy("host")
+        .agg(F.min("url").alias("u0"))
+        .select(
+            "host",
+            F.coalesce(
+                F.parse_url(F.col("u0"), F.lit("PROTOCOL")), F.lit("https")
+            ).alias("scheme"),
+        )
+        .join(
+            robots_tbl.select("host", F.col("fetched_batch").alias("_fb")),
+            "host",
+            "left",
+        )
+        .where(F.col("_fb").isNull() | (F.col("_fb") <= F.lit(b - ttl_batches)))
+        .select("host", "scheme")
+    )
+    # eager: side-effecting GETs run exactly once (the page-fetch rule)
+    raw_delta = fetch_robots_delta(stale, *fetch_args, b).localCheckpoint(eager=True)
+    fetched_2xx = (F.col("fstatus") >= 200) & (F.col("fstatus") < 300)
+    # bounded collect: one row per touched robots bucket (≤ claim's distinct
+    # hosts), doubling as the empty-delta check and carrying the
+    # did-any-fresh-robots-declare-sitemaps bit (same single job)
+    rb_info = (
+        raw_delta.select(
+            robots_bucket_of().alias("rb"),
+            (fetched_2xx & (F.size("sitemaps") > 0)).alias("sm"),
+        )
+        .groupBy("rb")
+        .agg(F.max("sm").alias("sm"))
+        .collect()
+    )
+    rb_buckets = sorted(int(r["rb"]) for r in rb_info)
+    if not rb_buckets:
+        return LiveRobots(robots_tbl.select("host", "prefixes", "rules", "unreachable"))
+    # RFC 9309 §2.3.1: a definitive 4xx is allow-all (absent file), but an
+    # UNREACHABLE robots.txt (5xx / redirect / transport error) must not
+    # replace known rules with allow-all — carry the host's stored rules (and
+    # legacy prefixes) forward under the new fetched_batch (retry next TTL);
+    # with no stored row, assume complete disallow.
+    unreachable = robots_unreachable_col()
+    # Unreachable rows are stamped with an EARLIER fetched_batch so the next
+    # claim of the host retries the fetch after a short window (ttl/8)
+    # instead of serving the carried-forward verdict (complete disallow on
+    # first contact!) for a full TTL — RFC 9309 only requires the disallow
+    # WHILE unreachable.
+    retry_stamp = F.lit(b - ttl_batches + retry_batches).cast("long")
+    old = robots_tbl.select(
+        "host",
+        F.col("prefixes").alias("_op"),
+        F.col("rules").alias("_or"),
+        F.col("crawl_delay").alias("_od"),
+        F.col("sitemaps").alias("_osm"),
+        F.col("fetched_batch").alias("_ofb"),
+        F.col("unreachable").alias("_ou"),
+    )
+    has_old = F.col("_ofb").isNotNull()
+    carried = unreachable & has_old
+    disallow_all = F.expr("array(named_struct('rx', '^/', 'n', 1, 'allow', false))")
+    robots_delta = raw_delta.join(old, "host", "left").select(
+        "host",
+        "scheme",
+        F.when(carried, F.col("_op"))
+        .otherwise(F.lit(None).cast("array<string>"))
+        .alias("prefixes"),
+        F.when(carried, F.col("_or"))
+        .when(unreachable, disallow_all)
+        .otherwise(F.col("rules"))
+        .cast(RULES_TYPE)
+        .alias("rules"),
+        F.when(carried, F.col("_od"))
+        .otherwise(F.col("crawl_delay"))
+        .alias("crawl_delay"),
+        F.when(carried, F.col("_osm"))
+        .otherwise(F.col("sitemaps"))
+        .alias("sitemaps"),
+        F.when(unreachable, retry_stamp)
+        .otherwise(F.col("fetched_batch"))
+        .alias("fetched_batch"),
+        # True ⟺ the verdict is the ASSUMED disallow-all of an unreachable
+        # contact with NO real stored rules behind it (carried-forward real
+        # rules keep ordinary-drop semantics; the stored flag rides along so
+        # a host first seen unreachable stays retryable until a 2xx/4xx)
+        F.when(unreachable, F.coalesce(F.col("_ou"), ~has_old))
+        .otherwise(F.lit(False))
+        .alias("unreachable"),
+    )
+    merges = {
+        "robots": dict(
+            delta=robots_delta,
+            key="host",
+            bucket_of=robots_bucket_of,
+            touched=rb_buckets,
+        ),
+        # Crawl-delay side table: ONLY hosts declaring a delay live here
+        # (tiny at any scale → broadcastable into the claim's politeness
+        # window); refreshed hosts that dropped their delay are deleted so
+        # the table never over-blocks
+        "robots_delays": dict(
+            delta=robots_delta.where(F.col("crawl_delay").isNotNull()).select(
+                "host", "crawl_delay"
+            ),
+            deletes=robots_delta.where(F.col("crawl_delay").isNull()).select("host"),
+            key="host",
+            bucket_of=robots_bucket_of,
+            touched=rb_buckets,
+        ),
+    }
+    lookup = (
+        robots_tbl.join(robots_delta.select("host"), "host", "left_anti")
+        .unionByName(robots_delta)
+        .select("host", "prefixes", "rules", "unreachable")
+    )
+    if not any(bool(r["sm"]) for r in rb_info):
+        return LiveRobots(lookup, merges)
+    # Sitemap ingestion (r6): sitemaps declared by FRESHLY fetched robots.txt
+    # files are GET'd once per robots TTL (executor-side, exactly-once via
+    # eager checkpoint — the page-fetch rule), <loc> entries extracted, one
+    # bounded nested level (sitemap indexes) followed, and the page URLs fed
+    # into THIS batch's publish stage — where the normal host-whitelist /
+    # blacklist / param-gate / seen-dedup gates apply, so a TTL refresh
+    # re-listing known URLs is anti-joined away for free.
+    sm_urls = (
+        raw_delta.where(fetched_2xx)
+        .select(F.explode("sitemaps").alias("sm_url"))
+        .distinct()
+    )
+    locs = fetch_sitemap_locs_delta(sm_urls, *fetch_args).localCheckpoint(eager=True)
+    nested = locs.where(F.col("is_xml")).select(F.col("loc").alias("sm_url")).distinct()
+    if nested.count() > 0:  # cheap: locs is checkpointed
+        locs = locs.unionByName(
+            fetch_sitemap_locs_delta(nested, *fetch_args).localCheckpoint(eager=True)
+        )
+    sitemap_candidates = locs.where(~F.col("is_xml")).select(
+        F.col("sm_url").alias("src"), F.col("loc").alias("url")
+    )
+    return LiveRobots(lookup, merges, sitemap_candidates)

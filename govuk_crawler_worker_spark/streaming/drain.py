@@ -31,58 +31,19 @@ class StreamingDrain:
         self._query = None
 
     def _on_tick(self, _tick_df, _tick_id: int) -> None:
-        """One drain batch per trigger if the frontier has claimable work.
-        Runs on the driver (foreachBatch) — the drain plan itself is fully
-        distributed; the tick only sequences commits."""
-        from pyspark.sql import functions as F
-
-        from govuk_crawler_worker_spark.plans import schemas as S
-
+        """One drain step per trigger (DrainLoop.step: a batch if the
+        frontier has work, maintenance, zero-claim policy).  Runs on the
+        driver (foreachBatch) — the drain plan itself is fully distributed;
+        the tick only sequences commits."""
         catalog = self.loop.catalog
-        meta = catalog.latest()["meta"]
-        b = int(meta.get("next_batch", 0))
-        n = meta.get("frontier_size")
-        if n is None:  # legacy/foreign catalog: count once
-            n = catalog.read("frontier", S.FRONTIER_SCHEMA).count()
-        n = int(n)
-        if n == 0:
+        b = int(catalog.latest()["meta"].get("next_batch", 0))
+        stats, nxt = self.loop.step(b)
+        if stats is None:
             return
-        stats = self.loop.run_batch(b, eligible_hint=n)
-        if (b + 1) % 64 == 0:
-            # same periodic maintenance the batch drain runs: long streaming
-            # crawls must not grow disk per tick
-            self.loop.catalog.expire_snapshots(keep_last=8)
-        cb = self.loop.compact_batches
-        if cb and (b + 1) % cb == 0:
-            # batch-drain parity: periodic MOR-chain fold + physical TTL
-            # reclaim (compact_seen piggy-backs reconcile_frontier)
-            self.loop.compact_seen()
-        elif (b + 1) % 256 == 0:
-            # batch-drain parity: bound the (over-count-only) frontier meta
-            # drift on long streaming crawls too
-            self.loop.reconcile_frontier()
-        if stats.claimed == 0:
-            # everything backed off: jump the clock like DrainLoop._drain
-            min_nb = (
-                catalog.read("frontier", S.FRONTIER_SCHEMA)
-                .agg(F.min("not_before_batch"))
-                .collect()[0][0]
-            )
-            if min_nb is None:
-                # frontier truly empty but meta said > 0: the frontier_size
-                # meta only ever OVER-counts (TTL-expired republish upserts),
-                # and without this correction a drifted meta makes every
-                # future tick run a full empty batch (and process_available
-                # busy-wait to its timeout).  True it up to 0 now — the
-                # batch drain's `break` is this path's streaming analogue.
-                self.loop.reconcile_frontier()
-            elif int(min_nb) > b + 1:
-                # fast-forward the checkpoint clock in the catalog meta
-                new_meta = dict(catalog.latest()["meta"])
-                new_meta["next_batch"] = int(min_nb)
-                catalog.commit(meta=new_meta)
-        # advance the checkpoint clock even if run_batch committed b: the
-        # commit inside run_batch already wrote next_batch = b+1 atomically.
+        if nxt is not None and nxt > b + 1:
+            # everything backed off: fast-forward the checkpoint clock in
+            # the catalog meta (run_batch's commit wrote next_batch = b + 1)
+            catalog.commit(meta={**catalog.latest()["meta"], "next_batch": nxt})
         self.batches_run.append(stats.batch_id)
 
     def start(self, spark: SparkSession):
@@ -99,22 +60,13 @@ class StreamingDrain:
         return self._query
 
     def process_available(self, timeout_s: float = 120.0) -> None:
-        """Test helper: let the stream drain everything currently claimable.
-
-        Reads the frontier size from the commit meta like ``_on_tick`` does
-        (no per-poll count job — the meta only over-counts, and hits exactly
-        0 when the drain is done); one count() only for legacy catalogs
-        without the meta field."""
+        """Test helper: let the stream drain everything currently claimable
+        (polls the frontier size like ``_on_tick`` does)."""
         import time
-
-        from govuk_crawler_worker_spark.plans import schemas as S
 
         deadline = time.monotonic() + timeout_s
         while time.monotonic() < deadline:
-            n = self.loop.catalog.latest()["meta"].get("frontier_size")
-            if n is None:
-                n = self.loop.catalog.read("frontier", S.FRONTIER_SCHEMA).count()
-            if int(n) == 0:
+            if self.loop.frontier_size() == 0:
                 break
             time.sleep(0.5)
 

@@ -65,7 +65,6 @@ class TestInDrainValidation:
             content.cache(),
             payload.cache(),
             origin=origin,
-            validate_payload=True,
         )
         loop.seed(seeds)
         loop.drain(max_batches=30)

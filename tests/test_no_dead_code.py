@@ -84,3 +84,21 @@ def test_allowlist_is_exact():
     defs, refs = _definitions(), _references()
     stale = {n for n in ALLOWED if n not in defs or n in refs}
     assert not stale, f"stale allowlist entries: {sorted(stale)}"
+
+
+# the drain's batch path is split into stage methods; a function past this
+# length is the monolith growing back
+MAX_FUNCTION_LINES = 200
+LENGTH_GUARDED = ("plans/pipeline.py", "streaming/drain.py")
+
+
+def test_drain_functions_stay_short():
+    long = {}
+    for rel in LENGTH_GUARDED:
+        path = PACKAGE / rel
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                n = node.end_lineno - node.lineno + 1
+                if n > MAX_FUNCTION_LINES:
+                    long[f"{rel}:{node.name}"] = n
+    assert not long, f"functions over {MAX_FUNCTION_LINES} lines: {long}"

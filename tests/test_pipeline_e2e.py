@@ -17,6 +17,23 @@ from govuk_crawler_worker_spark.sources.catalog import Catalog
 from govuk_crawler_worker_spark.sources.world import build_world, world_to_spark
 
 
+def count_batch_jobs(spark, loop):
+    """Wrap ``loop.run_batch`` so each batch's Spark job count (the change
+    in the scheduler's total) lands in ``loop.run_batch.jobs``."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    run_batch = loop.run_batch
+
+    def counted(b, eligible_hint=None):
+        n0 = scheduler.numTotalJobs()
+        try:
+            return run_batch(b, eligible_hint)
+        finally:
+            counted.jobs.append(scheduler.numTotalJobs() - n0)
+
+    counted.jobs = []
+    loop.run_batch = counted
+
+
 def run_drain(spark, world, tmp, **kw):
     payload, content, seeds = world_to_spark(spark, world)
     catalog = Catalog(spark, tmp)
@@ -24,8 +41,14 @@ def run_drain(spark, world, tmp, **kw):
         spark, catalog, world.config, content.cache(), payload.cache(), **kw
     )
     loop.seed(seeds)
+    count_batch_jobs(spark, loop)
     stats = loop.drain(max_batches=60)
     return catalog, loop, stats
+
+
+# per-batch Spark job counts of the two pinned drains below (local[4], AQE on)
+SMALL_SEEN_JOBS = [12, 12, 12, 13, 12, 12, 12, 9]
+FORCED_BLOOM_JOBS = [18, 17, 17, 19, 17, 17, 17, 9]
 
 
 def fetched_key(rows):
@@ -38,9 +61,13 @@ def small_world():
 
 
 @pytest.fixture(scope="module")
-def drained(spark, small_world):
-    tmp = tempfile.mkdtemp(prefix="drain_")
-    catalog, loop, stats = run_drain(spark, small_world, tmp)
+def drained_loop(spark, small_world):
+    return run_drain(spark, small_world, tempfile.mkdtemp(prefix="drain_"))
+
+
+@pytest.fixture(scope="module")
+def drained(drained_loop, small_world):
+    catalog, _, stats = drained_loop
     sim = simulate(small_world.content, small_world.seeds, small_world.config)
     return catalog, stats, sim, small_world
 
@@ -104,6 +131,12 @@ class TestDrainMatchesSimulator:
         assert bad == []
         lossy = [r["psnr"] for r in rows if r["psnr"] < 1e9]
         assert lossy and min(lossy) >= 40.0
+
+    def test_spark_jobs_per_batch_pinned(self, drained_loop):
+        # small-seen regime (broadcast anti-join, no bloom): a change in any
+        # batch's job count is a plan change, not a refactor
+        _, loop, _ = drained_loop
+        assert loop.run_batch.jobs == SMALL_SEEN_JOBS
 
 
 class TestPoliteness:
@@ -378,6 +411,8 @@ class TestSegmentedBloom:
         assert 0 < bloom.count()
         meta = catalog.latest()["meta"]["bloom"]
         assert meta["n_bits"] > 0 and meta["wm"] > 0
+        # forced-bloom regime: pinned per-batch Spark job counts
+        assert loop.run_batch.jobs == FORCED_BLOOM_JOBS
 
 
 class TestBatchConfsRestored:

@@ -333,7 +333,7 @@ class TestRobotsFetchDrain:
 
         from pyspark.sql import functions as F
 
-        from govuk_crawler_worker_spark.plans.pipeline import ROBOTS_BUCKETS
+        from govuk_crawler_worker_spark.plans.robots import ROBOTS_BUCKETS
 
         host = "www.gov.uk"
         html = "text/html; charset=utf-8"

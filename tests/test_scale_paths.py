@@ -384,6 +384,12 @@ class TestStreamingDriftReconcile:
         # and process_available now exits immediately off the trued-up meta
         sd.process_available(timeout_s=30.0)
         assert __import__("time").monotonic() - t0 < 25.0
+        # the batch drain trues up the same drift: its empty batch
+        # reconciles, so a second drain has no work left
+        catalog.commit(meta={**catalog.latest()["meta"], "frontier_size": 7})
+        loop.drain()
+        assert int(catalog.latest()["meta"]["frontier_size"]) == 0
+        assert loop.drain() == []
 
 
 class TestPrioritySchemeGuard:
