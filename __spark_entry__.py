@@ -587,7 +587,7 @@ def _simhash_banding_complete(spark, sf):
     can state, upgrading the simhash family from rows-only to value-checked
     without the oracle having to reproduce engine hashes."""
     from govuk_crawler_worker_spark.operators.dedup import (
-        simhash64,
+        posting_list_aggs,
         simhash_candidates,
     )
 
@@ -620,7 +620,8 @@ def _simhash_banding_complete(spark, sf):
         .where(F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))) <= 3)
         .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
     )
-    n_missed = exact.join(cand, ["a", "b"], "left_anti").count()
+    with posting_list_aggs(spark):
+        n_missed = exact.join(cand, ["a", "b"], "left_anti").count()
     # sig is the memoized shared signature (r8) — its lifecycle belongs to
     # _memo / reset_memos, not this query
     return spark.createDataFrame(

@@ -30,12 +30,34 @@ document-frequency filters, the textbook MinHash-at-scale mitigation.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from govuk_crawler_worker_spark.operators import fan_out
+from govuk_crawler_worker_spark.plans.pipeline import scoped_confs
+
+_HASH_AGG_FALLBACK = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+
+
+@contextmanager
+def posting_list_aggs(spark):
+    """Run the enclosed actions with the posting-list aggregates on the
+    object-hash path, and give the session back as it was.
+
+    Spark's object-hash aggregate falls back to SORT-based after 128
+    distinct keys per partition (a guard for unbounded collect_sets), which
+    re-sorts the whole exploded table; the posting lists here are bounded
+    (df caps, ~32-bit banding keys).  The threshold is read when a query is
+    planned for execution, so the scope wraps the materializing action, not
+    the plan building."""
+    with scoped_confs(spark, [_HASH_AGG_FALLBACK]):
+        spark.conf.set(_HASH_AGG_FALLBACK, "33554432")
+        yield
+
 
 # ---------------------------------------------------------------------------
 
@@ -96,12 +118,6 @@ def jaccard_word_pairs(
     CPU profile.  The df cap bounds every list at ``max_word_df`` entries,
     so the explode stays sub-quadratic at 100 TB exactly as before."""
     ws = _word_sets(fan_out(docs), text_col, id_col, block_col)
-    # posting-list aggregates: keep the object-hash aggregation path — the
-    # default 128-key sort-based fallback re-sorts the whole exploded table
-    # (see simhash_candidates; lists here are df-capped at max_word_df)
-    docs.sparkSession.conf.set(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "33554432"
-    )
     # the posting key is xxhash64(block ␟ word): one 8-byte long instead of
     # two strings through the shuffle (a 64-bit collision across the
     # ~1e5-entry vocabulary is ~1e-9 — far below any other error source)
@@ -149,7 +165,8 @@ def jaccard_word_pairs(
         # posting lists — the minhash_lsh_pairs lifecycle: the checkpoint
         # truncates lineage so the returned frame holds no reference to posts
         # and repeated calls cannot accrete cached blocks
-        out = out.localCheckpoint(eager=True)
+        with posting_list_aggs(docs.sparkSession):
+            out = out.localCheckpoint(eager=True)
         posts.unpersist()
     return out
 
@@ -431,7 +448,8 @@ def minhash_lsh_pairs(
     # a long-lived session cannot accrete cached blocks (r4 VERDICT
     # 'what's wrong #1').  The checkpointed result itself is reclaimed by the
     # ContextCleaner once the caller drops it.
-    out = out.localCheckpoint(eager=True)
+    with posting_list_aggs(docs.sparkSession):
+        out = out.localCheckpoint(eager=True)
     grouped_all.unpersist()
     return out
 
@@ -745,15 +763,8 @@ def simhash_candidates(
     # consumer that FILTERS the candidates first (hamming verify) can dedup
     # the few survivors instead of the full candidate set (guide §2.3:
     # shuffle fewer bytes) — the pair SET is unchanged either way.
-    sig.sparkSession.conf.set(
-        # one posting list per combo key: Spark's object-hash aggregate
-        # falls back to SORT-based after 128 distinct keys per partition (a
-        # guard for unbounded collect_sets), which re-sorts the whole combo
-        # table; list sizes here are bounded by the ~32-bit banding key, so
-        # keep the hash path (measured 3.7 -> 2.1 s on the cand stage)
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "33554432",
-    )
+    # The lists run on the object-hash path when the caller materializes
+    # under posting_list_aggs (measured 3.7 -> 2.1 s on the cand stage).
     lists = (
         keyed.groupBy("ci", "cv")
         .agg(F.collect_list(F.struct("doc_id", "simhash")).alias("ds"))
@@ -810,7 +821,8 @@ def simhash_pairs(
     # materialize then release the cached signature (lineage truncated, so
     # repeated calls don't accrete cached blocks — r4 VERDICT leak fix);
     # a caller-supplied sig keeps the caller's lifecycle
-    out = out.localCheckpoint(eager=True)
+    with posting_list_aggs(sig.sparkSession):
+        out = out.localCheckpoint(eager=True)
     if owns_sig:
         sig.unpersist()
     return out
@@ -840,12 +852,16 @@ def phash_near_dups(
     cand = simhash_candidates(
         sig, max_hamming=max_hamming, n_blocks=n_blocks, dedup=False
     )
-    return (
+    out = (
         cand.withColumn("hamming", F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))))
         .where(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
         .dropDuplicates(["a", "b"])
     )
+    # materialized here, like simhash_pairs, so the posting lists run on
+    # the object-hash path without the caller's session carrying the conf
+    with posting_list_aggs(hashes.sparkSession):
+        return out.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------

@@ -59,8 +59,9 @@ def _dims_norm(mat: "np.ndarray") -> "np.ndarray":
 
 def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
     """Driver-side query matrix — the same bounded set every prior shape
-    collected for its broadcast side."""
-    rows = queries.select(
+    collected for its broadcast side.  A query with a null vector has no
+    neighbours and is dropped (as the scorer drops null corpus rows)."""
+    rows = queries.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     ).collect()
@@ -110,7 +111,8 @@ def _scored_topk(emb, id_col, vec_col, k, make_mask, qids, qmat):
     candidate pairs of each batch (self-matches are always excluded)."""
     qnorm = _dims_norm(qmat) if len(qids) else np.zeros(0)
     vid_t = dict(emb.dtypes)[id_col]
-    corpus = fan_out(emb).select(
+    # a null vector has no cosine: such rows are not candidates
+    corpus = fan_out(emb.where(F.col(vec_col).isNotNull())).select(
         F.col(id_col).alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )

@@ -187,7 +187,14 @@ class HttpFetcher:
         across executors regardless of when each task starts, and the host
         truly sees one request per crawl-delay cluster-wide (clock skew
         between executors is the residual error; the claim budget remains the
-        hard per-batch bound)."""
+        hard per-batch bound).
+
+        The fetch exchange has one partition per group that can sleep (root
+        hosts × ``host_salt_buckets``), whatever the session's shuffle width:
+        groups that share a task run one after another, so a later group of
+        the same host wakes with its offsets already past and fetches
+        back-to-back.  A drain that narrows its shuffles for a small batch
+        therefore does not narrow the fetch."""
         allowed = set(self.config.root_hosts_no_port)
         max_retries = self.config.max_crawl_retries
         opener = self.opener
@@ -256,4 +263,9 @@ class HttpFetcher:
             pdf["redirect_to"] = redirects
             return pdf
 
+        # hash-partitioned on exactly the grouping keys: the groupBy below
+        # reuses this exchange instead of planning its own
+        paced = paced.repartition(
+            len(allowed) * self.config.host_salt_buckets, "host", "salt"
+        )
         return paced.groupBy("host", "salt").applyInPandas(fetch_group, out_schema)

@@ -510,9 +510,17 @@ class DrainLoop:
         # so a segment-count change simply takes effect at the next rebuild
         segs = self.bloom_segments
         nb, k = bloom_sizing(capacity // segs + 1)
-        merged = bloom_partials(
-            seen_raw, "url_hash", segs, nb, k
-        ).localCheckpoint(eager=True)
+        # the rebuild shuffles every seen hash by segment: size that exchange
+        # to the seen rows (~2k per partition, one per segment at most), not
+        # to the batch's wave, which follows the frontier
+        with scoped_confs(self.spark, ["spark.sql.shuffle.partitions"]):
+            self.spark.conf.set(
+                "spark.sql.shuffle.partitions",
+                str(min(segs, max(1, -(-seen_size // 2000)))),
+            )
+            merged = bloom_partials(
+                seen_raw, "url_hash", segs, nb, k
+            ).localCheckpoint(eager=True)
         new_meta = {
             "n_bits": nb,
             "k": k,
@@ -754,14 +762,27 @@ class DrainLoop:
         """Size the BATCH_CONFS to the eligible wave (run_batch restores them)."""
         if eligible_hint is None:
             return
-        # Wave-sized shuffling: a 500-row BFS wave through 32-partition
-        # shuffles pays 32 tasks of scheduling per stage for nothing (the
-        # small-batch floor is stage-scheduling bound — measured ~30% of
-        # per-batch latency).  Size shuffle partitions to the eligible wave
-        # (~2k rows/partition, floor 8), capped at the session's configured
-        # value so big batches are untouched.
+        # Shuffle partitions follow the eligible wave, ~2k rows per
+        # partition, capped at the session's configured value so big
+        # batches are untouched:
+        #     wave_parts = min(shuffle0, max(1, ceil(eligible_hint / 2000)))
+        # There is no floor: the small-batch floor is set by Python-worker
+        # tasks, and every exchange fans out to wave_parts of them (the
+        # routed pass runs the blacklist and extract UDFs).  On a 4-vCPU
+        # host each task that evaluates a pandas UDF costs ~0.14 s of CPU,
+        # ~78% of it pyspark's per-task setup_spark_files →
+        # importlib.invalidate_caches(), which on Python 3.11 re-reads
+        # pyspark.zip's directory for every zipimporter.  A trivial pandas
+        # UDF over 12 rows took 0.19 s at 1 partition and 0.54 s at 8; the
+        # old floor of 8 gave a 12-URL BFS batch 383 tasks.  The cost is CPU,
+        # so a floor at the slot count does not hide it.
+        # The seen table does not enter the count: past broadcast size the
+        # claim gate and the publish dedup read only the seen buckets of
+        # the rows in hand, and the bloom rebuild, the one O(seen) shuffle,
+        # sizes its own exchange (_bloom_for_batch).  HttpFetcher sizes its
+        # fetch exchange itself.
         shuffle0 = int(confs0["spark.sql.shuffle.partitions"] or 32)
-        wave_parts = max(8, min(shuffle0, eligible_hint // 2000))
+        wave_parts = min(shuffle0, max(1, -(-eligible_hint // 2000)))
         self.spark.conf.set("spark.sql.shuffle.partitions", str(wave_parts))
         # AQE re-plans stage-by-stage — a driver round trip per shuffle.  On
         # a small wave (the BFS feedback regime, ~30 stages of a few hundred

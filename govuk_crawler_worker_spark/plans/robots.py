@@ -143,16 +143,26 @@ def _winning_groups(
     ]
 
 
+def parse_robots_policy(
+    text: str, agent: str = "govuk_crawler_worker_spark"
+) -> tuple[list[tuple[str, bool]], float | None]:
+    """The rules and the ``Crawl-delay`` applying to ``agent``, from ONE
+    pass over ``text`` (see :func:`parse_robots`, :func:`parse_crawl_delay`)."""
+    groups = _winning_groups(text, agent)
+    rules: list[tuple[str, bool]] = []
+    for group_rules, _delay in groups:
+        rules.extend(r for r in group_rules if r not in rules)
+    delays = [d for _rules, d in groups if d is not None]
+    return rules, (max(delays) if delays else None)
+
+
 def parse_robots(
     text: str, agent: str = "govuk_crawler_worker_spark"
 ) -> list[tuple[str, bool]]:
     """Ordered ``(pattern, allow)`` rules applying to ``agent`` — the most
     specific matching user-agent group wins (all groups at that specificity
     combine), falling back to ``*``.  Deterministic, pure."""
-    out: list[tuple[str, bool]] = []
-    for rules, _delay in _winning_groups(text, agent):
-        out.extend(r for r in rules if r not in out)
-    return out
+    return parse_robots_policy(text, agent)[0]
 
 
 def parse_crawl_delay(
@@ -161,8 +171,7 @@ def parse_crawl_delay(
     """``Crawl-delay`` seconds applying to ``agent`` (None when absent).
     Group selection is identical to the Disallow/Allow rules; when several
     winning groups declare a delay, the LARGEST (most polite) is used."""
-    delays = [d for _rules, d in _winning_groups(text, agent) if d is not None]
-    return max(delays) if delays else None
+    return parse_robots_policy(text, agent)[1]
 
 
 def parse_sitemaps(text: str) -> list[str]:
@@ -297,8 +306,8 @@ def fetch_robots_delta(
                     )
                     if 200 <= status < 300 and body:
                         txt = body.decode("utf-8", "replace")
-                        rules = rules_to_structs(parse_robots(txt, agent))
-                        delay = parse_crawl_delay(txt, agent)
+                        pairs, delay = parse_robots_policy(txt, agent)
+                        rules = rules_to_structs(pairs)
                         sitemaps = parse_sitemaps(txt)
                 except Exception:  # noqa: BLE001 — transport error = unreachable
                     status = -1

@@ -3,6 +3,7 @@ status routing, host gate (no real network in the sandbox)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from govuk_crawler_worker_spark.config import CrawlConfig
@@ -146,3 +147,44 @@ class TestDefaultOpener:
         # unroutable port on localhost → URLError/OSError path
         with pytest.raises(Exception):
             default_opener("http://127.0.0.1:9/x", {}, 0.5)
+
+
+@pytest.mark.parametrize("session_parts", ["8", "32"])
+def test_drain_batch_keeps_fetch_width(spark, tmp_path, session_parts):
+    """A small drain batch narrows its shuffles to the rows it moves, but
+    the paced fetch keeps one partition per (host, salt) group, whatever the
+    session width: groups packed into one task would run back-to-back and
+    fetch late."""
+    from govuk_crawler_worker_spark.plans.pipeline import DrainLoop, scoped_confs
+    from govuk_crawler_worker_spark.sources.catalog import Catalog
+    from govuk_crawler_worker_spark.sources.world import build_world, world_to_spark
+
+    world = build_world(n_pages=18, seed=42)
+    payload, _, seeds = world_to_spark(spark, world)
+    stage_log = str(tmp_path / "fetch_stages")
+
+    def opener(url, headers, timeout_s):  # closure: shipped by value
+        from pyspark import TaskContext
+
+        with open(stage_log, "a") as fh:
+            fh.write(f"{TaskContext.get().stageId()}\n")
+        return 200, "text/html", b"<p>leaf</p>", url
+
+    fetcher = HttpFetcher(world.config, opener=opener, sleep=lambda s: None)
+    loop = DrainLoop(
+        spark, Catalog(spark, str(tmp_path / "cat")), world.config, payload=payload,
+        fetcher=fetcher,
+    )
+    loop.seed(seeds)
+    key = "spark.sql.shuffle.partitions"
+    with scoped_confs(spark, [key]):
+        spark.conf.set(key, session_parts)
+        n = loop.frontier_size()
+        assert 0 < n < 2000  # a wave the sizing rule narrows to 1 partition
+        assert loop.run_batch(0, eligible_hint=n).fetched > 0
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    with open(stage_log) as fh:
+        stages = {int(line) for line in fh}
+    groups = len(world.config.root_hosts_no_port) * world.config.host_salt_buckets
+    assert [sc.statusTracker().getStageInfo(s).numTasks for s in stages] == [groups]

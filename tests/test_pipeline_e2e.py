@@ -17,9 +17,21 @@ from govuk_crawler_worker_spark.sources.catalog import Catalog
 from govuk_crawler_worker_spark.sources.world import build_world, world_to_spark
 
 
+def batch_tasks(spark, job_ids) -> int:
+    """Tasks run by the stages of ``job_ids`` (a stage shared by two jobs
+    counts once; a skipped stage, whose shuffle output was reused, runs 0)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+    tracker = sc.statusTracker()
+    stage_ids = {s for j in job_ids for s in tracker.getJobInfo(j).stageIds}
+    return sum(tracker.getStageInfo(s).numCompletedTasks for s in stage_ids)
+
+
 def count_batch_jobs(spark, loop):
     """Wrap ``loop.run_batch`` so each batch's Spark job count (the change
-    in the scheduler's total) lands in ``loop.run_batch.jobs``."""
+    in the scheduler's total) lands in ``loop.run_batch.jobs`` and the tasks
+    those jobs ran in ``loop.run_batch.tasks``.  Job ids are sequential, so
+    the batch's jobs are the ids between the two totals."""
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     run_batch = loop.run_batch
 
@@ -28,9 +40,11 @@ def count_batch_jobs(spark, loop):
         try:
             return run_batch(b, eligible_hint)
         finally:
-            counted.jobs.append(scheduler.numTotalJobs() - n0)
+            n1 = scheduler.numTotalJobs()
+            counted.jobs.append(n1 - n0)
+            counted.tasks.append(batch_tasks(spark, range(n0, n1)))
 
-    counted.jobs = []
+    counted.jobs, counted.tasks = [], []
     loop.run_batch = counted
 
 
@@ -46,9 +60,20 @@ def run_drain(spark, world, tmp, **kw):
     return catalog, loop, stats
 
 
-# per-batch Spark job counts of the two pinned drains below (local[4], AQE on)
+# per-batch Spark job counts of the two pinned drains below (local[4], AQE
+# on, 8 shuffle partitions), and the task counts each batch may not exceed
+# (recorded in the same setting; the exact figures also move with the Spark
+# version and AQE's coalescing)
 SMALL_SEEN_JOBS = [12, 12, 12, 13, 12, 12, 12, 9]
 FORCED_BLOOM_JOBS = [18, 17, 17, 19, 17, 17, 17, 9]
+SMALL_SEEN_TASKS = [85, 94, 96, 96, 65, 63, 61, 47]
+FORCED_BLOOM_TASKS = [114, 105, 110, 144, 81, 79, 75, 49]
+
+
+def assert_tasks_within(tasks, pinned):
+    """Each batch ran at most its pinned task count."""
+    assert len(tasks) == len(pinned)
+    assert all(t <= p for t, p in zip(tasks, pinned)), (tasks, pinned)
 
 
 def fetched_key(rows):
@@ -137,6 +162,7 @@ class TestDrainMatchesSimulator:
         # batch's job count is a plan change, not a refactor
         _, loop, _ = drained_loop
         assert loop.run_batch.jobs == SMALL_SEEN_JOBS
+        assert_tasks_within(loop.run_batch.tasks, SMALL_SEEN_TASKS)
 
 
 class TestPoliteness:
@@ -413,6 +439,7 @@ class TestSegmentedBloom:
         assert meta["n_bits"] > 0 and meta["wm"] > 0
         # forced-bloom regime: pinned per-batch Spark job counts
         assert loop.run_batch.jobs == FORCED_BLOOM_JOBS
+        assert_tasks_within(loop.run_batch.tasks, FORCED_BLOOM_TASKS)
 
 
 class TestBatchConfsRestored:

@@ -471,6 +471,45 @@ class TestParseCrawlDelay:
         assert parse_robots(txt) == [("/q", False)]
 
 
+class TestFetchRobotsParsesOnce:
+    def test_one_group_pass_per_fetched_file(self, monkeypatch):
+        """fetch_robots_delta's executor body, driven in-process through a
+        stand-in frame: each fetched robots.txt is group-parsed once, for
+        its rules and its Crawl-delay together."""
+        import pandas as pd
+
+        from govuk_crawler_worker_spark.plans import robots
+
+        calls = []
+        winning_groups = robots._winning_groups
+
+        def counted(text, agent):
+            calls.append(text)
+            return winning_groups(text, agent)
+
+        monkeypatch.setattr(robots, "_winning_groups", counted)
+        bodies = {
+            "a.example": b"User-agent: *\nCrawl-delay: 3\nDisallow: /x\n",
+            "b.example": b"User-agent: *\nDisallow: /y\n",
+        }
+
+        def opener(url, headers, timeout_s):
+            return 200, "text/plain", bodies[url.split("/")[2]], url
+
+        class Frame:  # the mapInPandas contract, run on the driver
+            def mapInPandas(self, fn, schema):
+                hosts = pd.DataFrame(
+                    {"host": list(bodies), "scheme": ["https"] * len(bodies)}
+                )
+                return pd.concat(list(fn(iter([hosts]))))
+
+        out = robots.fetch_robots_delta(Frame(), opener, lambda h: {}, 1.0, 0)
+        assert len(calls) == len(bodies)
+        assert out["crawl_delay"].tolist()[0] == 3.0
+        assert pd.isna(out["crawl_delay"].tolist()[1])
+        assert [[r["allow"] for r in rs] for rs in out["rules"]] == [[False], [False]]
+
+
 class TestParseSitemaps:
     def test_sitemap_lines_are_agent_independent(self):
         from govuk_crawler_worker_spark.plans.robots import parse_sitemaps

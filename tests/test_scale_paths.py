@@ -581,6 +581,37 @@ class TestBloomRebuild:
         for r in rows:  # every surviving bitmap decodes under the NEW geometry
             BloomFilter.from_bytes(bytes(r["bits"]), new_meta["n_bits"], new_meta["k"])
 
+    def test_rebuild_exchange_follows_seen_rows(self, spark):
+        """The rebuild shuffles every seen hash by segment: that exchange is
+        sized to the seen rows (~2k per partition), not to a one-row wave,
+        and the batch's width is given back afterwards."""
+        from govuk_crawler_worker_spark.plans.pipeline import scoped_confs
+
+        n = 5000
+        seeds = pd.DataFrame(
+            {"url": [f"https://www.gov.uk/p{i}" for i in range(n)], "priority": 1}
+        )
+        content = pd.DataFrame([_content_row("https://www.gov.uk/p0")])
+        catalog, loop = _mk_loop(
+            spark, content, seeds, CrawlConfig(),
+            tempfile.mkdtemp(prefix="bloomw_"), bloom_min_batch=0,
+        )
+        sc = spark.sparkContext
+        scheduler = sc._jsc.sc().dagScheduler()
+        keys = ["spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"]
+        with scoped_confs(spark, keys):
+            spark.conf.set(keys[0], "1")  # the width of a one-row wave
+            spark.conf.set(keys[1], "false")  # as run_batch sets it there
+            j0 = scheduler.numTotalJobs()
+            *_, rebuilt = loop._bloom_for_batch(0, catalog.latest()["meta"])
+            jobs = range(j0, scheduler.numTotalJobs())
+            assert rebuilt and spark.conf.get(keys[0]) == "1"
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        (job,) = jobs
+        result_stage = max(tracker.getJobInfo(job).stageIds)
+        assert tracker.getStageInfo(result_stage).numTasks == 3  # ceil(5000/2000)
+
     def test_stale_bitmap_fails_safe_to_maybe_seen(self, spark):
         """A geometry-mismatched bitmap must flag maybe_seen=True (exact join
         decides) — never a silent garbage decode."""

@@ -15,6 +15,7 @@ from govuk_crawler_worker_spark.operators.dedup import (
     exact_dedup,
     jaccard_word_pairs,
     minhash_lsh_pairs,
+    phash_near_dups,
     simhash_pairs,
 )
 from govuk_crawler_worker_spark.operators.similarity import brute_force_topk, lsh_topk
@@ -79,6 +80,35 @@ class TestDedup:
         assert (0, 30) in out
 
 
+class TestDedupConfScope:
+    """The posting-list operators run their aggregates on the object-hash
+    path, and the session keeps its own fallback threshold afterwards."""
+
+    KEY = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+
+    @pytest.mark.parametrize(
+        "op",
+        [
+            lambda docs: jaccard_word_pairs(docs, threshold=0.8),
+            lambda docs: minhash_lsh_pairs(docs, jaccard_threshold=0.5),
+            simhash_pairs,
+            lambda docs: phash_near_dups(
+                docs.sparkSession.createDataFrame(
+                    [("a", 1), ("b", 3), ("c", -1)], "image_id string, phash long"
+                )
+            ),
+        ],
+        ids=["jaccard_word_pairs", "minhash_lsh_pairs", "simhash_pairs", "phash_near_dups"],
+    )
+    def test_session_conf_unchanged(self, spark, op):
+        from govuk_crawler_worker_spark.plans.pipeline import scoped_confs
+
+        with scoped_confs(spark, [self.KEY]):
+            spark.conf.set(self.KEY, "128")  # Spark's default
+            op(_corpus(spark))
+            assert spark.conf.get(self.KEY) == "128"
+
+
 class TestSimilarity:
     def _emb(self, spark, n=200, dim=32, seed=3):
         rng = np.random.default_rng(seed)
@@ -102,6 +132,25 @@ class TestSimilarity:
             rows.sort()
             sims = [c for _, c in rows]
             assert sims == sorted(sims, reverse=True)
+
+    def test_brute_force_topk_drops_null_vectors(self, spark):
+        # a null embedding has no cosine: the row is no neighbour and no
+        # query, on either side, and the other rows rank as without it
+        emb = self._emb(spark, n=40)
+        with_null = emb.unionByName(
+            spark.createDataFrame(
+                [(999, None, 0)], "vec_id long, embedding array<float>, label int"
+            )
+        )
+        q = emb.where(F.col("vec_id") < 4)
+        q_null = with_null.where((F.col("vec_id") < 4) | (F.col("vec_id") == 999))
+
+        def rows(df):
+            return sorted(tuple(r) for r in df.collect())
+
+        assert rows(brute_force_topk(with_null, q_null, k=3)) == rows(
+            brute_force_topk(emb, q, k=3)
+        )
 
     def test_lsh_recall_against_brute_force(self, spark):
         # clustered data (the realistic embedding shape): centers + noise —
