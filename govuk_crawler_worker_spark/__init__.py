@@ -15,8 +15,9 @@ Architecture (Spark-first, not a port):
   route → extract → dedup → commit), all deltas in ONE atomic commit.
 * goquery link extraction   → Arrow-vectorized pandas UDF returning
   array<string> + ``explode``.
-* per-URL fetch goroutines  → salted ``groupBy(host, salt).applyInPandas``
-  politeness buckets (hot-host skew handled explicitly).
+* per-URL fetch goroutines  → salted (host, salt) politeness buckets: a JVM
+  window schedule, fetched in offset order by one ``mapInPandas`` pass
+  (hot-host skew handled explicitly).
 
 Subpackages
 -----------

@@ -59,7 +59,7 @@ class CrawlConfig:
     robots_ttl_s: float = 24 * 3600.0
 
     # Skew: number of salt buckets a hot host is split into for the
-    # politeness groupBy (salted applyInPandas buckets).
+    # politeness budget and the fetch schedule.
     host_salt_buckets: int = 8
 
     def __post_init__(self):

@@ -1,22 +1,24 @@
-"""Per-host politeness: salted groupBy-applyInPandas pacing buckets.
+"""Per-host politeness: the claim's salted host buckets and their fetch
+schedule.
 
 Two layers enforce politeness (north rule: robots rules + crawl-delay budgets
 at 10^10-URL frontier scale, replacing the reference's implicit per-URL
 serialization across 4 fetch goroutines, workflow.go:146-148):
 
 1. **Claim budget** (plans/pipeline.py): at most ``batch_period/delay`` URLs
-   per host enter a batch — a window rank, fully JVM-side.  This bounds the
+   per host enter a batch, split over the k = ``host_salt_buckets`` salts of
+   :func:`host_salt_col` — a window rank, fully JVM-side.  This bounds the
    work; it is what the sim-equality tests pin.
 
-2. **In-batch pacing** (this module): the fetcher must also SPACE requests
-   inside the batch.  One pandas group per (host, salt) assigns each row a
-   ``fetch_offset_s`` schedule: bucket ``s`` of ``k`` fetches at times
-   ``s·delay, s·delay + k·delay, s·delay + 2k·delay, …`` — the k buckets
-   interleave into a global per-host cadence of exactly ``delay`` seconds
-   while each bucket runs independently on its own executor.  Hot hosts are
-   thereby split across the cluster (skew kill) WITHOUT violating the
-   per-host delay.  An HTTP fetcher sleeps to its offsets; the synthetic
-   table fetcher records them so tests can assert the cadence.
+2. **In-batch pacing** (:func:`pace_claim`): the fetcher must also SPACE
+   requests inside the batch.  A JVM window over the same (host, salt)
+   buckets assigns each row a ``fetch_offset_s``: bucket ``s`` of ``k``
+   fetches at ``s·delay, s·delay + k·delay, s·delay + 2k·delay, …`` — the k
+   buckets interleave into a per-host cadence of exactly ``delay`` seconds
+   while each bucket can run on its own executor.  Hot hosts are thereby
+   split across the cluster (skew kill) WITHOUT violating the per-host
+   delay.  The HTTP fetcher (plans/fetch.py) sleeps to these offsets; the
+   table fetcher does not pace.
 
 robots.txt: path-prefix disallow rules per host (config.robots_disallow),
 applied as a vectorized filter at claim time — same plan shape as the
@@ -25,52 +27,44 @@ blacklist (crawler_message_item.go:239-247).
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-PACED_EXTRA_COLS = "salt int, fetch_seq int, fetch_offset_s double"
+
+def host_salt_col(k: int, b: int = 0):
+    """A row's salt ``(crc32(url_canon) + b) % k``; at ``b = 0`` the
+    simulator's ``zlib.crc32(url_canon) % k``.  The claim splits each host's
+    budget over these k buckets.  Rotated by the batch id it is the bucket's
+    slot in that batch's schedule: the budget's remainder goes to the lowest
+    slots, so a claim of B rows per host fills slots ``0 … B-1``."""
+    return F.pmod(F.crc32(F.col("url_canon").cast("binary")) + F.lit(b), F.lit(k))
 
 
-def with_host_salt(df: DataFrame, n_salts: int, url_hash_col: str = "url_hash") -> DataFrame:
-    return df.withColumn("salt", F.pmod(F.col(url_hash_col), F.lit(n_salts)).cast("int"))
+def pace_claim(claimed: DataFrame, config) -> DataFrame:
+    """Claimed rows + ``salt`` and ``fetch_offset_s``, hash-partitioned on
+    (host, salt) into root hosts × ``host_salt_buckets`` partitions.
 
-
-def pace_claim(
-    claimed: DataFrame,
-    config,
-    order_cols: tuple[str, ...] = ("priority", "url_canon"),
-) -> DataFrame:
-    """Assign deterministic fetch schedules per (host, salt) bucket.
-
-    Shuffle key = (host, salt): a hot host with 10^7 eligible rows spreads
-    over ``host_salt_buckets`` groups instead of one straggler task.  Offsets
-    interleave so the HOST sees one request per ``delay`` regardless of how
-    many buckets run in parallel.
-    """
-    n_salts = config.host_salt_buckets
-    delays = dict(config.crawl_delay_by_host)
-    default_delay = config.default_crawl_delay_s
-
-    df = with_host_salt(claimed, n_salts)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in claimed.schema.fields
-    ) + ", " + PACED_EXTRA_COLS
-
-    def pace(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        host, salt = key
-        delay = delays.get(host, default_delay)
-        pdf = pdf.sort_values(["priority", "url_canon"], ascending=[False, True]).copy()
-        pdf["fetch_seq"] = range(len(pdf))
-        if delay <= 0:
-            pdf["fetch_offset_s"] = 0.0
-        else:
-            stride = delay * n_salts
-            pdf["fetch_offset_s"] = salt * delay + pdf["fetch_seq"] * stride
-        pdf["salt"] = salt
-        return pdf
-
-    return df.groupBy("host", "salt").applyInPandas(pace, out_schema)
+    ``salt`` is the claim's batch slot when the claim tagged one, else the
+    batch-0 salt.  Slot s fetches at ``s·d, s·d + k·d, …``, so a claim
+    within its budget B ends before ``B·d``, inside the batch period.  The
+    rank window runs on the (host, salt) exchange (no second shuffle).  A
+    host's delay ``d`` is its configured one, raised to the live robots.txt
+    ``Crawl-delay`` when the claim carries a ``crawl_delay`` column."""
+    k = config.host_salt_buckets
+    delay = F.lit(float(config.default_crawl_delay_s))
+    for host, d in config.crawl_delay_by_host.items():
+        delay = F.when(F.col("host") == host, F.lit(float(d))).otherwise(delay)
+    if "crawl_delay" in claimed.columns:
+        delay = F.greatest(delay, F.col("crawl_delay"))  # NULL-skipping
+    if "salt" not in claimed.columns:
+        claimed = claimed.withColumn("salt", host_salt_col(k))
+    w = Window.partitionBy("host", "salt").orderBy(
+        F.col("priority").desc(), F.col("url_canon").asc()
+    )
+    rank = F.row_number().over(w) - 1
+    return claimed.repartition(
+        len(config.root_hosts_no_port) * k, "host", "salt"
+    ).withColumn("fetch_offset_s", (F.col("salt") + rank * k) * delay)
 
 
 def robots_disallowed_col(config, url_col: str = "url", host_col: str = "host"):

@@ -14,11 +14,12 @@ exercise the identical downstream plan:
   the fetch; transient faults are emulated by deriving an EFFECTIVE status
   (429 while ``busy_429_n > attempt_count``, 503 while ``fail_5xx_n`` not yet
   consumed) from the world's fault counters.  Hermetic test/bench path.
-* **HttpFetcher** — the production path: fetch inside
-  ``groupBy(host, salt).applyInPandas`` so the politeness schedule
-  (operators/politeness.py) executes WHERE the requests happen: each bucket
-  sleeps to its shared-epoch interleaved offsets, giving the host one request
-  per crawl-delay across the whole cluster.
+* **HttpFetcher** — the production path: the politeness schedule
+  (operators/politeness.py:pace_claim) is computed JVM-side over the claim's
+  (host, salt) buckets, each task's rows are sorted by their offset, and one
+  ``mapInPandas`` pass fetches them in that order, sleeping to each row's
+  shared-epoch offset — the host sees one request per crawl-delay across
+  the whole cluster.
 
 HttpFetcher is exercised through the FULL drain against a local HTTP server
 (tests/test_http_fetcher.py, tests/test_pipeline_e2e.py) — the sandbox only
@@ -177,24 +178,22 @@ class HttpFetcher:
         return headers
 
     def fetch(self, claimed: DataFrame, epoch: float | None = None) -> DataFrame:
-        """claimed frontier rows → rows + fetch-result columns, fetched inside
-        salted politeness buckets with in-group pacing (no executor ever
-        sleeps longer than its own bucket's schedule).
+        """claimed frontier rows → rows + fetch-result columns, fetched in
+        schedule order: one (host, salt) exchange, a rank window on it, a
+        per-task sort by ``fetch_offset_s`` and one ``mapInPandas`` pass.
 
-        All (host, salt) buckets anchor their schedule to a SHARED ``epoch``
-        (batch start wall-clock, captured on the driver) — bucket s sleeps
-        until ``epoch + fetch_offset_s``, so the interleaved offsets hold
-        across executors regardless of when each task starts, and the host
-        truly sees one request per crawl-delay cluster-wide (clock skew
-        between executors is the residual error; the claim budget remains the
-        hard per-batch bound).
+        Every task anchors its schedule to a SHARED ``epoch`` (batch start
+        wall-clock, captured on the driver) and sleeps until ``epoch +
+        fetch_offset_s`` before each request, so the interleaved offsets
+        hold across executors regardless of when each task starts (clock
+        skew between executors is the residual error; the claim budget
+        remains the hard per-batch bound).  A task holding several buckets
+        of one host walks them merged in offset order, so packing buckets
+        into one task keeps the crawl-delay spacing.
 
-        The fetch exchange has one partition per group that can sleep (root
-        hosts × ``host_salt_buckets``), whatever the session's shuffle width:
-        groups that share a task run one after another, so a later group of
-        the same host wakes with its offsets already past and fetches
-        back-to-back.  A drain that narrows its shuffles for a small batch
-        therefore does not narrow the fetch."""
+        The exchange has root hosts × ``host_salt_buckets`` partitions,
+        whatever the session's shuffle width, so a drain that narrows its
+        shuffles for a small batch does not narrow the fetch."""
         allowed = set(self.config.root_hosts_no_port)
         max_retries = self.config.max_crawl_retries
         opener = self.opener
@@ -205,67 +204,53 @@ class HttpFetcher:
         if epoch is None:
             epoch = self.now()
 
-        paced = pace_claim(claimed, self.config)
+        paced = pace_claim(claimed, self.config).sortWithinPartitions("fetch_offset_s")
         out_schema = (
             ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in paced.schema.fields)
             + ", "
             + FETCH_RESULT_COLS
         )
 
-        def fetch_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            host, _salt = key
-            pdf = pdf.sort_values("fetch_seq").copy()
-            statuses, ctypes, bodies, redirects = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                # blacklist drop + retry gate (workflow.go:40-44, 93-98)
-                # checked BEFORE the request — such rows must not consume the
-                # host's politeness budget with a wasted fetch; the route
-                # chain drops/deads them regardless of status
-                if (
-                    getattr(row, "blacklisted", False)
-                    or getattr(row, "robots_blocked", False)
-                    or getattr(row, "crawl_count", 0) > max_retries
-                ):
-                    statuses.append(None)
-                    ctypes.append(None), bodies.append(None), redirects.append(None)
-                    continue
-                # host gate WITHOUT port (crawler.go:154-169): not under a
-                # root host → ErrCannotCrawlURL → reject-drop
-                if host.split(":", 1)[0] not in allowed:
-                    statuses.append(490)  # engine-internal: host-gate reject
-                    ctypes.append(None), bodies.append(None), redirects.append(None)
-                    continue
-                wait = (epoch + row.fetch_offset_s) - now_fn()
-                if wait > 0:
-                    sleeper(wait)  # the shared-epoch politeness schedule
-                try:
-                    status, ctype, body, final_url = opener(
-                        row.url, headers_for(host), timeout_s
-                    )
-                    statuses.append(int(status))
-                    ctypes.append(ctype)
-                    if status in (301, 302, 303, 307):
-                        # meta-refresh trick (crawler.go:91-109): surface the
-                        # target as the sole outlink
-                        redirects.append(final_url)
-                        bodies.append(None)
-                    else:
-                        redirects.append(None)
-                        bodies.append(
-                            body.decode("utf-8", "replace") if body is not None else None
-                        )
-                except Exception:  # noqa: BLE001 — any transport error → 404-class drop
-                    statuses.append(404)
-                    ctypes.append(None), bodies.append(None), redirects.append(None)
-            pdf["status"] = pd.array(statuses, dtype="Int32")  # nullable
-            pdf["content_type"] = ctypes
-            pdf["body_html"] = bodies
-            pdf["redirect_to"] = redirects
-            return pdf
+        def fetch_row(row) -> tuple:
+            # blacklist drop + retry gate (workflow.go:40-44, 93-98) checked
+            # BEFORE the request — such rows must not consume the host's
+            # politeness budget with a wasted fetch; the route chain
+            # drops/deads them regardless of status
+            if (
+                getattr(row, "blacklisted", False)
+                or getattr(row, "robots_blocked", False)
+                or getattr(row, "crawl_count", 0) > max_retries
+            ):
+                return None, None, None, None
+            # host gate WITHOUT port (crawler.go:154-169): not under a root
+            # host → ErrCannotCrawlURL → reject-drop
+            if row.host.split(":", 1)[0] not in allowed:
+                return 490, None, None, None  # engine-internal: host-gate reject
+            wait = (epoch + row.fetch_offset_s) - now_fn()
+            if wait > 0:
+                sleeper(wait)  # the shared-epoch politeness schedule
+            try:
+                status, ctype, body, final_url = opener(
+                    row.url, headers_for(row.host), timeout_s
+                )
+                if status in (301, 302, 303, 307):
+                    # meta-refresh trick (crawler.go:91-109): surface the
+                    # target as the sole outlink
+                    return int(status), ctype, None, final_url
+                body = body.decode("utf-8", "replace") if body is not None else None
+                return int(status), ctype, body, None
+            except Exception:  # noqa: BLE001 — any transport error → 404-class drop
+                return 404, None, None, None
 
-        # hash-partitioned on exactly the grouping keys: the groupBy below
-        # reuses this exchange instead of planning its own
-        paced = paced.repartition(
-            len(allowed) * self.config.host_salt_buckets, "host", "salt"
-        )
-        return paced.groupBy("host", "salt").applyInPandas(fetch_group, out_schema)
+        def fetch_task(batches):
+            # rows arrive in offset order (sortWithinPartitions above)
+            for pdf in batches:
+                res = [fetch_row(row) for row in pdf.itertuples(index=False)]
+                status, ctype, body, redirect = list(zip(*res)) or [()] * 4
+                pdf["status"] = pd.array(status, dtype="Int32")  # nullable
+                pdf["content_type"] = list(ctype)
+                pdf["body_html"] = list(body)
+                pdf["redirect_to"] = list(redirect)
+                yield pdf
+
+        return paced.mapInPandas(fetch_task, out_schema)

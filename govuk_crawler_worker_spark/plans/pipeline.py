@@ -11,7 +11,7 @@ with one stage method per reference stage, called in order by run_batch:
                   budget (window), priority order + claim limit, then the
                   claimed rows' seen states for the retry gate        (A1)
     _fetch_route  fetch (a content-table join in tests/bench, paced HTTP GETs
-                  in applyInPandas in production) and one `when` route chain:
+                  in mapInPandas in production) and one `when` route chain:
                   retry-gate dead / 404 dead / 429 requeue / 5XX incr+requeue /
                   redirect-as-HTML / non-accepted reset / HTML / other ack;
                   the extraction UDF runs in the same pass            (A2)
@@ -62,7 +62,10 @@ from govuk_crawler_worker_spark.config import CrawlConfig
 from govuk_crawler_worker_spark.functions import content_types as ct
 from govuk_crawler_worker_spark.functions.extract import make_extract_udf
 from govuk_crawler_worker_spark.functions.urlnorm import make_udfs
-from govuk_crawler_worker_spark.operators.politeness import robots_disallowed_col
+from govuk_crawler_worker_spark.operators.politeness import (
+    host_salt_col,
+    robots_disallowed_col,
+)
 from govuk_crawler_worker_spark.operators.seen import (
     bloom_or_merge,
     bloom_partials,
@@ -597,7 +600,8 @@ class DrainLoop:
         table, broadcast-joined here so the per-host budget becomes
         min(config budget, accumulated-fairness live budget).  A delay
         longer than the batch period legitimately yields budget 0 on some
-        batches (the host is claimed every ⌈d/P⌉-th batch)."""
+        batches (the host is claimed every ⌈d/P⌉-th batch).  The claimed
+        rows keep ``crawl_delay`` so the fetch schedule paces with it too."""
         cfg = self.config
         eligible = frontier.where(F.col("not_before_batch") <= F.lit(b))
 
@@ -626,24 +630,23 @@ class DrainLoop:
         else:
             # SALTED politeness window: partitioning the rank window by host
             # alone would put a hot host's entire eligible set in ONE task.
-            # Split each host's budget across k salt ranks (canonical salt =
-            # crc32(url_canon) % k, reproducible in the simulator); the
-            # remainder rotates with the batch id so no salt rank starves a
-            # URL forever.  Σ_s budget_s = budget exactly, so the per-batch
-            # politeness bound is unchanged.
+            # Split each host's budget across k salt ranks (host_salt_col,
+            # reproducible in the simulator); the remainder rotates with the
+            # batch id so no salt rank starves a URL forever.  Σ_s budget_s =
+            # budget exactly, so the per-batch politeness bound is unchanged.
+            # Rows carry their rotated salt: the fetch schedule's slot.
             k = cfg.host_salt_buckets
-            salt = F.pmod(F.crc32(F.col("url_canon").cast("binary")), F.lit(k))
+            slot = host_salt_col(k, b)
             salt_budget = F.floor(budget / k) + F.when(
-                F.pmod(salt + F.lit(b), F.lit(k)) < budget % k, 1
+                slot < budget % k, 1
             ).otherwise(0)
-            w_host = Window.partitionBy("host", salt).orderBy(*order)
+            w_host = Window.partitionBy("host", host_salt_col(k)).orderBy(*order)
             budgeted = (
                 eligible.withColumn("host_rank", F.row_number().over(w_host))
                 .where(F.col("host_rank") <= salt_budget)
                 .drop("host_rank")
+                .withColumn("salt", slot)
             )
-        if live_delays is not None:
-            budgeted = budgeted.drop("crawl_delay")
         # The global top-K claim (orderBy+limit) leaves the batch in ONE
         # partition — poison for every downstream stage.  Skip the sort when
         # the limit cannot bind (frontier smaller than claim_limit — the
@@ -855,7 +858,7 @@ class DrainLoop:
         status-driven route chain and the extraction UDF, materialized once."""
         # The fetcher is pluggable behind one contract (plans/fetch.py):
         # TableFetcher joins the synthetic web (tests/bench), HttpFetcher
-        # does real paced GETs inside applyInPandas — the route chain is
+        # does real paced GETs inside mapInPandas — the route chain is
         # driven purely by the returned status, so both paths exercise the
         # identical downstream plan (crawler.go:84-109 status routing).
         cfg, u = self.config, self.udfs
@@ -896,8 +899,10 @@ class DrainLoop:
         fetched_raw = self.fetcher.fetch(enriched, epoch=time.time())
         if "image_id" not in fetched_raw.columns:
             fetched_raw = fetched_raw.withColumn("image_id", F.lit(None).cast("string"))
+        # the fetch schedule's inputs and outputs (the live Crawl-delay rides
+        # the claim so the HTTP fetcher paces with it)
         pacing_cols = [
-            c for c in ("salt", "fetch_seq", "fetch_offset_s") if c in fetched_raw.columns
+            c for c in ("salt", "fetch_offset_s", "crawl_delay") if c in fetched_raw.columns
         ]
         redirect = F.col("status").isin(*REDIRECT_STATUSES)
         route_col = (

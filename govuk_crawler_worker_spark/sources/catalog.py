@@ -224,7 +224,6 @@ class Catalog:
         appends: dict[str, DataFrame] | None = None,
         merges: dict[str, dict] | None = None,
         meta: dict[str, Any] | None = None,
-        partition_by: dict[str, list[str]] | None = None,
     ) -> int:
         """Write new snapshot segments then publish them plus carried-forward
         pointers for untouched tables in ONE rename — all-or-nothing.
@@ -263,14 +262,10 @@ class Catalog:
             k: dict(v) for k, v in prev.get("parts", {}).items()
         }
         schemas: dict[str, str] = dict(prev.get("schemas", {}))
-        partition_by = partition_by or {}
 
         def write(name: str, df: DataFrame) -> str:
             rel = os.path.join("tables", name, f"snap-{n:08d}")
-            writer = df.write.mode("overwrite")
-            if name in partition_by:
-                writer = writer.partitionBy(*partition_by[name])
-            writer.parquet(os.path.join(self.root, rel))
+            df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
             return rel
 
         def merge_keyed(spec: dict) -> DataFrame:

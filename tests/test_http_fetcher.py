@@ -1,7 +1,11 @@
-"""HttpFetcher: applyInPandas fetch with injected opener — headers, pacing,
-status routing, host gate (no real network in the sandbox)."""
+"""HttpFetcher: the paced mapInPandas fetch with an injected opener —
+headers, pacing, plan shape, status routing, host gate (no outbound
+network; the opener is faked or points at a local server)."""
 
 from __future__ import annotations
+
+import re
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -78,6 +82,75 @@ def test_http_fetcher_paces_within_bucket(spark):
     assert all(d >= 0.05 - 1e-9 for d in diffs)
 
 
+def _paced_config():
+    return CrawlConfig(
+        root_urls=("https://www.gov.uk/",),
+        crawl_delay_by_host={"www.gov.uk": 1.0},
+        host_salt_buckets=8,
+    )
+
+
+def _frontier(spark, n):
+    # url_hash as the drain computes it
+    claimed = _claim(spark, [f"https://www.gov.uk/p{i:03d}" for i in range(n)])
+    return claimed.withColumn("url_hash", F.xxhash64("url_canon"))
+
+
+def test_http_fetcher_plans_one_exchange_and_one_python_stage(spark):
+    fetcher = HttpFetcher(
+        _paced_config(), opener=make_fake_opener(), rate_limit_token="tok123",
+        sleep=lambda s: None,
+    )
+    out = fetcher.fetch(_frontier(spark, 16), epoch=0.0)
+    assert len(out.collect()) == 16
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE prints both
+    assert final.count("Exchange hashpartitioning") == 1, final
+    assert len(re.findall(r"\w+(?:InPandas|EvalPython|InArrow)\b", final)) == 1, final
+
+
+def test_http_fetcher_spaces_requests_within_each_task(spark, tmp_path):
+    """Whatever (host, salt) buckets one task holds, its requests to the
+    host are at least one crawl-delay apart on the task's own clock."""
+    log = str(tmp_path / "requests")
+
+    class TaskClock:
+        # defined in the test: cloudpickle ships it by value, and each task
+        # unpickles its own instance — a virtual clock per task
+        def __init__(self):
+            self.t = 0.0
+
+        def sleep(self, s):
+            self.t += s
+
+        def now(self):
+            return self.t
+
+        def opener(self, url, headers, timeout_s):
+            from pyspark import TaskContext
+
+            with open(log, "a") as fh:
+                fh.write(f"{TaskContext.get().partitionId()} {self.t} {url}\n")
+            return 200, "text/html", b"<p>leaf</p>", url
+
+    clock = TaskClock()
+    cfg = _paced_config()
+    fetcher = HttpFetcher(cfg, opener=clock.opener, sleep=clock.sleep, now=clock.now)
+    assert fetcher.fetch(_frontier(spark, 32), epoch=0.0).count() == 32
+    by_task: dict[int, list[float]] = {}
+    salts: dict[int, set[int]] = {}
+    with open(log) as fh:
+        for line in fh:
+            pid, t, url = line.split()
+            by_task.setdefault(int(pid), []).append(float(t))
+            salts.setdefault(int(pid), set()).add(zlib.crc32(url.encode()) % 8)
+    assert sum(map(len, by_task.values())) == 32
+    assert max(map(len, salts.values())) > 1  # some task holds 2+ buckets
+    delay = cfg.crawl_delay_by_host["www.gov.uk"]
+    gaps = [b - a for ts in by_task.values() for a, b in zip(ts, ts[1:])]
+    assert min(gaps) >= delay - 1e-9, by_task
+
+
 class TestDefaultOpener:
     """The production opener against a real local HTTP server: redirects
     must surface as 3xx statuses (NOT be followed), 429/5xx must surface as
@@ -152,9 +225,8 @@ class TestDefaultOpener:
 @pytest.mark.parametrize("session_parts", ["8", "32"])
 def test_drain_batch_keeps_fetch_width(spark, tmp_path, session_parts):
     """A small drain batch narrows its shuffles to the rows it moves, but
-    the paced fetch keeps one partition per (host, salt) group, whatever the
-    session width: groups packed into one task would run back-to-back and
-    fetch late."""
+    the paced fetch keeps root hosts × salts partitions, whatever the
+    session width, so the host's salt buckets can fetch in parallel."""
     from govuk_crawler_worker_spark.plans.pipeline import DrainLoop, scoped_confs
     from govuk_crawler_worker_spark.sources.catalog import Catalog
     from govuk_crawler_worker_spark.sources.world import build_world, world_to_spark

@@ -88,10 +88,15 @@ def test_allowlist_is_exact():
     assert not stale, f"stale allowlist entries: {sorted(stale)}"
 
 
-# the drain's batch path is split into stage methods; a function past this
-# length is the monolith growing back
+# the drain's batch path and the fetch paths are split into stage functions;
+# a function past this length is a monolith growing back
 MAX_FUNCTION_LINES = 200
-LENGTH_GUARDED = ("plans/pipeline.py", "streaming/drain.py")
+LENGTH_GUARDED = (
+    "plans/pipeline.py",
+    "streaming/drain.py",
+    "plans/fetch.py",
+    "plans/robots.py",
+)
 
 
 def test_drain_functions_stay_short():
