@@ -230,7 +230,7 @@ def soak_drain(pages: int) -> dict:
 
     from govuk_crawler_worker_spark.config import CrawlConfig
     from govuk_crawler_worker_spark.plans.pipeline import DrainLoop
-    from govuk_crawler_worker_spark.sources.catalog import Catalog
+    from govuk_crawler_worker_spark.sources.catalog import MOR_MAX_CHAIN, Catalog
     from govuk_crawler_worker_spark.sources.world import HOSTS
 
     spark = make_spark(CPUS, aqe=False)
@@ -290,9 +290,6 @@ def soak_drain(pages: int) -> dict:
         )
         or None,
         bloom_segments=int(os.environ.get("BENCH_SOAK_BLOOM_SEGMENTS", "0")) or None,
-        # MOR chain-cap sensitivity knob (r4 verdict #8): e.g.
-        # BENCH_SOAK_MOR_MAX_CHAIN=8 python bench.py --soak 60000
-        mor_max_chain=int(os.environ.get("BENCH_SOAK_MOR_MAX_CHAIN", "0")) or None,
     )
     # rebuild counting: under delta-fold, _bloom_for_batch returning
     # rebuilt=True is exactly a full-seen-scan rebuild (the small-regime
@@ -375,7 +372,7 @@ def soak_drain(pages: int) -> dict:
         "compaction_fired": len(compaction_batches) >= 1,
         # dead (unreferenced) bytes stay bounded relative to LIVE data.
         # Under MOR the steady-state garbage is the inline bucket folds:
-        # each bucket folds every ~mor_max_chain (16) commits, and expiry
+        # each bucket folds every ~MOR_MAX_CHAIN (16) commits, and expiry
         # runs every 64 batches, so up to ~expiry/cap ≈ 4 fold generations
         # of each bucket can be dead at once — dead ≤ ~4-5× live is the
         # design bound (measured 2.3× on the 1M soak; copy-on-write
@@ -388,7 +385,7 @@ def soak_drain(pages: int) -> dict:
     out = {
         "pages": pages,
         "bucket_scheme": dict(loop.bucket_scheme),
-        "mor_max_chain": loop.mor_max_chain or 16,
+        "MOR_MAX_CHAIN": MOR_MAX_CHAIN,
         "fetched": fetched,
         "batches": len(stats),
         "total_sec": round(dt, 1),

@@ -35,7 +35,6 @@ otherwise):
                          the state tables go merge-on-read (default 2000000;
                          THE strategy switch at scale — deployment-sizeable)
     COMPACT_BATCHES      MOR/TTL compaction cadence in batches (default 1024)
-    MOR_MAX_CHAIN        merge-on-read chain cap before inline fold (default 16)
     FETCH_ROBOTS         1 = live robots.txt fetch + enforcement (default 0)
 
 The wiring is exactly the tested components: Catalog (atomic resume),
@@ -89,7 +88,6 @@ def _build_loop(e, spark, opener):
         # knob is None-when-unset, not falsy-when-unset
         bloom_min_batch=int(bloom_min) if bloom_min is not None else None,
         compact_batches=int(e.get("COMPACT_BATCHES", "1024")),
-        mor_max_chain=int(e.get("MOR_MAX_CHAIN", "0")) or None,
         # live robots.txt fetch+enforcement (one GET/host/TTL); static
         # config rules always apply regardless
         fetch_robots=e.get("FETCH_ROBOTS", "0") == "1",

@@ -7,7 +7,7 @@ frame-sample run as Arrow-batched ``mapInPandas`` — the Spark-side plumbing
 is a stub where the container lacks the library:
 
 * ``png`` / ``jpeg`` decode — REAL (sources/images.py + the pure-numpy
-  baseline JPEG codec in sources/jpeg.py; pre-r6 QIM1 payloads still read)
+  baseline JPEG codec in sources/jpeg.py)
 * any other fmt — raises NotImplementedError, clearly marked, so a real
   deployment drops in libjpeg/ffmpeg bindings without touching plan shape.
 """

@@ -50,12 +50,14 @@ Scale notes (10^10-URL frontier, 1000 executors):
 
 from __future__ import annotations
 
+import json
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from govuk_crawler_worker_spark.config import CrawlConfig
@@ -88,26 +90,12 @@ REQUEUE_ROUTES = ("requeue_429", "requeue_5xx", "requeue_robots")
 
 N_PRIORITY_BUCKETS = 4  # frontier partition key: priority_bucket = clamp(priority)
 
-# Bucketing-scheme version stamped into the commit meta alongside
-# frontier_pb_counts.  The claim-scan pruning assumes ORDERED (clamped)
-# buckets; rows persisted by a pre-clamp catalog (scheme 1: priority % N)
-# violate that ordering, and pruning over them could claim lower-priority
-# rows over skipped higher-priority ones WITHOUT tripping the under-delivery
-# fallback (the mis-bucketed prefix can still fill claim_limit).  Pruning
-# therefore only engages when the stored scheme matches; a legacy catalog
-# falls back to the always-correct full frontier scan until
-# migrate_buckets() rewrites its buckets.
-PB_SCHEME = 2  # 2 = clamped/ordered (priority_bucket_col); 1/absent = legacy mod
-
 # state-table bucketing DEFAULTS (sandbox-sized; a production catalog runs
 # O(1000) buckets).  These are only defaults: the effective counts are
 # constructor/config values stamped into the commit meta as
-# ``bucket_scheme`` at seed time (the pb_scheme pattern) — the STORED stamp
-# always wins on resume, because bucket geometry is a physical property of
-# the data already on disk.  A catalog with state but NO stamp (written
-# before r5) is assumed to use these defaults for writes, and every read
-# falls back to full-scan semantics until migrate_buckets() rewrites and
-# stamps it.
+# ``bucket_scheme`` at seed time — the STORED stamp always wins on resume,
+# because bucket geometry is a physical property of the data already on
+# disk.
 SEEN_BUCKETS = 32  # seen bucketed by pmod(url_hash, N)
 FRONTIER_HOST_BUCKETS = 8  # frontier by (priority_bucket, pmod(hash(host), M))
 BLOOM_SEGMENTS = 16  # segmented bloom table rows
@@ -122,6 +110,36 @@ def _bucket_scheme(base: dict, seen, frontier_host, bloom_segments) -> dict[str,
     """``base`` with each requested (truthy) count overriding its entry."""
     asked = dict(seen=seen, frontier_host=frontier_host, bloom_segments=bloom_segments)
     return {k: int(asked[k] or v) for k, v in base.items()}
+
+
+# commit-meta keys every catalog with seen or frontier state carries (the
+# bucket geometry and the frontier counts the claim pruning reads), and the
+# columns the robots table's recorded schema must hold
+REQUIRED_META = ("bucket_scheme", "frontier_size", "frontier_pb_counts")
+REQUIRED_ROBOTS_COLS = ("rules", "unreachable")
+
+
+def check_catalog_format(manifest: dict) -> None:
+    """Raise ValueError, naming the missing piece, for a catalog written in
+    a format this engine does not read (before r7: no geometry stamp or
+    frontier counts in the commit meta, or robots rows without ``rules`` /
+    ``unreachable``).  A fresh catalog passes."""
+    parts = manifest.get("parts", {}) or {}
+    if any(manifest["tables"].get(t) or parts.get(t) for t in ("seen", "frontier")):
+        meta = manifest.get("meta") or {}
+        for key in REQUIRED_META:
+            if key not in meta:
+                raise ValueError(
+                    f"catalog written before r7: commit meta lacks {key!r}"
+                )
+    robots = manifest.get("schemas", {}).get("robots")
+    if robots is not None:
+        cols = StructType.fromJson(json.loads(robots)).fieldNames()
+        for col in REQUIRED_ROBOTS_COLS:
+            if col not in cols:
+                raise ValueError(
+                    f"catalog written before r7: robots table lacks {col!r}"
+                )
 
 
 # StatsD-style metrics are observability, not crawl state (the reference
@@ -288,7 +306,6 @@ class DrainLoop:
         payload: DataFrame | None = None,
         ttl_batches: int | str | None = "auto",
         backoff_batches: int | None = None,
-        use_bloom: bool = True,
         origin: DataFrame | None = None,
         fetcher=None,
         bloom_min_batch: int | None = None,
@@ -299,7 +316,6 @@ class DrainLoop:
         bloom_segments: int | None = None,
         compact_batches: int = 1024,
         fetch_robots: bool = False,
-        mor_max_chain: int | None = None,
     ):
         from govuk_crawler_worker_spark.plans.fetch import TableFetcher
 
@@ -326,7 +342,6 @@ class DrainLoop:
         if backoff_batches is None:
             backoff_batches = batches(config.backoff_429_s)
         self.ttl_batches, self.backoff_batches = ttl_batches, backoff_batches
-        self.use_bloom = use_bloom
         # north rule: each micro-batch validates decoded pixels against the
         # origin (PSNR ≥ 40 dB lossy / exact lossless, caption equality);
         # enabled when the ground-truth origin table is available.
@@ -351,10 +366,6 @@ class DrainLoop:
         # MOR-chain + physical-TTL compaction cadence (batches between
         # compact_seen() calls inside step(); 0/None disables)
         self.compact_batches = int(compact_batches or 0)
-        # merge-on-read chain cap for the state tables (None → catalog
-        # default 16): the read-fold-cost vs write-amplification knob —
-        # see BENCH/BASELINE.md "mor_max_chain sensitivity"
-        self.mor_max_chain = None if mor_max_chain is None else int(mor_max_chain)
         # live robots.txt enforcement (plans/robots.py — beyond-reference
         # production surface): requires a fetcher exposing the opener
         # contract (HttpFetcher); the config-only static rules always apply
@@ -371,37 +382,20 @@ class DrainLoop:
         # stamped catalog the STORED counts always win — geometry is a
         # physical property of the rows already on disk; a requested change
         # takes effect only via migrate_buckets() (O(table), once).  A
-        # non-empty catalog with NO stamp (pre-r5) is assumed to use the
-        # module defaults for writes (the only geometry this engine ever
-        # shipped) but every read drops to full-scan semantics — correct for
-        # any geometry — until migrate_buckets() rewrites and stamps it.
+        # catalog in an older format is refused here, before any batch.
         self.requested_bucket_scheme = _bucket_scheme(
             DEFAULT_BUCKET_SCHEME, seen_buckets, frontier_host_buckets, bloom_segments
         )
         manifest0 = catalog.latest()
-        stamp = (manifest0.get("meta") or {}).get("bucket_scheme")
-        parts = manifest0.get("parts", {}) or {}
-        has_state = any(
-            manifest0["tables"].get(t) or parts.get(t) for t in ("seen", "frontier")
-        )
-        # unstamped state: full-scan reads until migrated; a fresh catalog
-        # is stamped by seed()
-        self.buckets_stamped = stamp is not None or not has_state
-        if stamp is not None:
-            req = self.requested_bucket_scheme
-            self._use_bucket_scheme({k: int(stamp.get(k, v)) for k, v in req.items()})
-        else:
-            self._use_bucket_scheme(
-                DEFAULT_BUCKET_SCHEME if has_state else self.requested_bucket_scheme
-            )
+        check_catalog_format(manifest0)
+        stamp = manifest0["meta"].get("bucket_scheme")
+        self._use_bucket_scheme(stamp or self.requested_bucket_scheme)
 
     def _use_bucket_scheme(self, scheme: dict[str, int]) -> None:
         self.bucket_scheme = dict(scheme)
         self.seen_buckets = scheme["seen"]
         self.frontier_host_buckets = scheme["frontier_host"]
         self.bloom_segments = scheme["bloom_segments"]
-        # informational: a caller asked for counts the stored stamp overrides
-        self.bucket_scheme_mismatch = self.bucket_scheme != self.requested_bucket_scheme
 
     # effective-geometry bucket columns (close over the resolved counts)
     def _seen_bucket_of(self, df):
@@ -456,13 +450,11 @@ class DrainLoop:
                 "frontier_size": n_seeds,
                 "seen_size": n_seeds,
                 "frontier_pb_counts": pb_counts,
-                "pb_scheme": PB_SCHEME,
                 # physical bucket geometry of the state tables — resumers
                 # MUST use these counts regardless of their own config
                 "bucket_scheme": dict(self.bucket_scheme),
             },
         )
-        self.buckets_stamped = True
 
     # -- segmented bloom lifecycle (catalog-table state, no driver bitmaps) ---
 
@@ -482,13 +474,13 @@ class DrainLoop:
 
         Rebuild from the full raw seen table — the only O(seen) path, and
         amortized: capacity is sized 8× ahead — when items outgrow capacity,
-        when no filter exists yet (the regime just engaged), or when a
-        legacy catalog's watermark trails the batch clock (rows committed in
-        [wm, b) were never folded; rebuilding beats resurrecting the scan
-        path for a one-time migration).  Over-inclusion is always safe
-        (reset/TTL rows stay in the filter; the exact join decides) — what
-        matters is NO false negatives, guaranteed because batch b's commit
-        atomically covers batch b's delta before batch b+1 probes."""
+        when no filter exists yet (the regime just engaged), or when the
+        watermark trails the batch clock (a ``bloom_min_seen`` raised and
+        then lowered between runs leaves the batches in [wm, b) unfolded).
+        Over-inclusion is always safe (reset/TTL rows stay in the filter; the
+        exact join decides) — what matters is NO false negatives, guaranteed
+        because batch b's commit atomically covers batch b's delta before
+        batch b+1 probes."""
         meta = prev_meta.get("bloom")
         seen_size = int(prev_meta.get("seen_size", 0))
         if (
@@ -554,12 +546,6 @@ class DrainLoop:
         pruned: bool)."""
         cfg = self.config
         pb_counts = prev_meta.get("frontier_pb_counts")
-        if prev_meta.get("pb_scheme") != PB_SCHEME or not self.buckets_stamped:
-            # rows persisted under a different bucketing scheme (legacy
-            # priority % N) break the ordered-prefix invariant the pruning
-            # relies on, and an UNSTAMPED catalog's physical bucket geometry
-            # is unverified — full scan until the catalog is migrated
-            pb_counts = None
         if pb_counts and eligible_hint is not None and eligible_hint > cfg.claim_limit:
             counts = {int(k): int(v) for k, v in pb_counts.items() if int(v) > 0}
             prefix, cum = [], 0
@@ -669,14 +655,12 @@ class DrainLoop:
 
     def _expired_seen(self, b: int, rows: DataFrame | None = None):
         """Seen rows after TTL expiry: ``rows``' seen buckets, or the full
-        table when not pruning (``rows`` None) or unstamped.  Returns (seen,
-        the bucket ids read; None = full scan)."""
+        table when not pruning (``rows`` None).  Returns (seen, the bucket
+        ids read; None = full scan)."""
         # ``rows`` must be materialized: its bucket footprint is a bounded
-        # collect of bucket ids, never row data.  An unstamped legacy
-        # catalog's physical bucket geometry is unverified, so it gets the
-        # always-correct full scan (migrate_buckets() restores pruning).
+        # collect of bucket ids, never row data.
         buckets = None
-        if rows is not None and self.buckets_stamped:
+        if rows is not None:
             buckets = sorted(
                 int(r["sb"])
                 for r in rows.select(self._seen_bucket_of(rows).alias("sb"))
@@ -879,9 +863,7 @@ class DrainLoop:
             # no forced broadcast: the lookup is already bucket-pruned to the
             # claim's hosts' buckets, and AQE picks broadcast when it is small
             pre_enriched = pre_enriched.join(robots_lookup, "host", "left")
-            robots_col = robots_col | robots_blocked_col(
-                F.col("rules"), F.col("prefixes")
-            )
+            robots_col = robots_col | robots_blocked_col(F.col("rules"))
             unreachable_col = F.coalesce(F.col("unreachable"), F.lit(False))
         enriched = pre_enriched.select(
             "*",
@@ -895,7 +877,7 @@ class DrainLoop:
             unreachable_col.alias("robots_unreachable"),
         )
         if robots_lookup is not None:
-            enriched = enriched.drop("prefixes", "rules", "unreachable")
+            enriched = enriched.drop("rules", "unreachable")
         fetched_raw = self.fetcher.fetch(enriched, epoch=time.time())
         if "image_id" not in fetched_raw.columns:
             fetched_raw = fetched_raw.withColumn("image_id", F.lit(None).cast("string"))
@@ -1080,17 +1062,15 @@ class DrainLoop:
         #   seen < bloom_min_seen          → broadcast-hint exact anti-join
         #                                    (build side ships once, cheapest
         #                                    while the seen table is small)
-        #   seen ≥ bloom_min_seen, bloom   → segmented-bloom pre-filter cuts
+        #   seen ≥ bloom_min_seen          → segmented-bloom pre-filter cuts
         #                                    the probe side; the bloom-POSITIVE
         #                                    survivors confirm via a BUCKETED
         #                                    anti-join against only their seen
         #                                    buckets — no broadcast, both
         #                                    sides move by bucketed shuffle
-        #   seen ≥ bloom_min_seen, no bloom→ bucketed anti-join for ALL
-        #                                    candidates (same plan, no filter)
         # NOTHING is collected on any path except bounded bucket-id lists.
         bloom = None
-        if self.use_bloom and claim.prune_seen:
+        if claim.prune_seen:
             bloom = BloomState(*self._bloom_for_batch(b, bt.prev_meta))
             cands = bloom_probe_join(
                 cands, bloom.probe, "url_hash", *bloom.geometry
@@ -1102,16 +1082,9 @@ class DrainLoop:
             new_urls = certainly_new.unionByName(
                 self._anti_join_seen(maybe, b, claim_delta)
             )
-        elif not claim.prune_seen:
+        else:
             # the same broadcast-sized seen scan the claim gate used
             new_urls = self._anti_join_seen(cands, b, claim_delta, claim.seen)
-        else:
-            # bloom disabled but the seen table is past broadcast size:
-            # materialize the candidates (via the bucket collect), then
-            # bucket-wise exact anti-join
-            new_urls = self._anti_join_seen(
-                cands.localCheckpoint(eager=False), b, claim_delta
-            )
         inserts = (
             new_urls.select(
                 "url",
@@ -1385,9 +1358,6 @@ class DrainLoop:
                 mor=claim.prune_seen,
             ),
         }
-        if self.mor_max_chain is not None:
-            merges["frontier"]["mor_max_chain"] = self.mor_max_chain
-            merges["seen"]["mor_max_chain"] = self.mor_max_chain
         # freshly fetched robots.txt rules ride the same atomic commit
         merges.update(robots.merges)
         bloom = pub.bloom
@@ -1415,29 +1385,29 @@ class DrainLoop:
         new_meta = dict(prev_meta)
         new_meta["next_batch"] = bt.b + 1
         new_meta["frontier_size"] = (
-            self.frontier_size(prev_meta, bt.eligible_hint)
+            self.frontier_size(prev_meta)
             - stats.claimed
             + stats.requeued
             + stats.published
         )
         new_meta["seen_size"] = int(prev_meta.get("seen_size", 0)) + stats.published
-        if prev_meta.get("frontier_pb_counts") is not None:
-            # per-priority-bucket counts for the claim-scan pruning: exact
-            # delta arithmetic except published (which may upsert a row the
-            # frontier already holds — over-count only, the safe direction:
-            # meta ≥ actual always, so meta==0 still implies actually empty
-            # and pruning only ever over-reads; reconcile_frontier() trues
-            # it up periodically)
-            pbc = {
-                int(k2): int(v) for k2, v in prev_meta["frontier_pb_counts"].items()
-            }
-            for pb, d in pub.pb_delta.items():
-                pbc[pb] = pbc.get(pb, 0) + d
-            if stats.published:
-                pbc[0] = pbc.get(0, 0) + stats.published  # published → priority 0
-            new_meta["frontier_pb_counts"] = {
-                str(pb): n2 for pb, n2 in pbc.items() if n2 > 0
-            }
+        # per-priority-bucket counts for the claim-scan pruning: exact
+        # delta arithmetic except published (which may upsert a row the
+        # frontier already holds — over-count only, the safe direction:
+        # meta ≥ actual always, so meta==0 still implies actually empty and
+        # pruning only ever over-reads; reconcile_frontier() trues it up
+        # periodically)
+        pbc = {
+            int(k2): int(v)
+            for k2, v in prev_meta.get("frontier_pb_counts", {}).items()
+        }
+        for pb, d in pub.pb_delta.items():
+            pbc[pb] = pbc.get(pb, 0) + d
+        if stats.published:
+            pbc[0] = pbc.get(0, 0) + stats.published  # published → priority 0
+        new_meta["frontier_pb_counts"] = {
+            str(pb): n2 for pb, n2 in pbc.items() if n2 > 0
+        }
         if pub.bloom is not None:
             new_meta["bloom"] = pub.bloom.meta
         return new_meta
@@ -1477,30 +1447,24 @@ class DrainLoop:
         frontier_host_buckets: int | None = None,
         bloom_segments: int | None = None,
     ) -> None:
-        """One-time rewrite of the state tables into a NEW bucket geometry
-        (also the priority-bucket scheme migration: every frontier row's
-        ``priority_bucket`` is recomputed and ``pb_scheme`` stamped): full
-        `_full` merge of seen + frontier in ONE atomic commit with the new
-        bucket functions, ``bucket_scheme`` stamped, and the bloom filter
-        meta dropped (the next bloom batch rebuilds at the new segment
-        count — over-inclusion-safe).  O(table) once; afterwards every
-        bucketed read/write path re-engages at the new counts.  Defaults:
+        """One-time rewrite of the state tables into a NEW bucket geometry:
+        full `_full` merge of seen + frontier in ONE atomic commit with the
+        new bucket functions, ``bucket_scheme`` stamped, and the bloom
+        filter meta dropped (the next bloom batch rebuilds at the new
+        segment count — over-inclusion-safe).  O(table) once; afterwards
+        every bucketed read/write path runs at the new counts.  Defaults:
         the counts the constructor REQUESTED (so `DrainLoop(...,
-        seen_buckets=128)` on an old catalog migrates to 128 with a bare
-        `migrate_buckets()`)."""
+        seen_buckets=128)` on a 32-bucket catalog migrates to 128 with a
+        bare `migrate_buckets()`)."""
         req = self.requested_bucket_scheme
         new_scheme = _bucket_scheme(
             req, seen_buckets, frontier_host_buckets, bloom_segments
         )
-        frontier = self.catalog.read("frontier", S.FRONTIER_SCHEMA).withColumn(
-            # recompute the ORDERED priority bucket too — a single migration
-            # entry point covers both legacy schemes
-            "priority_bucket",
-            priority_bucket_col(F.col("priority")),
-        ).localCheckpoint(eager=True)
+        frontier = self.catalog.read("frontier", S.FRONTIER_SCHEMA).localCheckpoint(
+            eager=True
+        )
         seen = self.catalog.read("seen", S.SEEN_SCHEMA).localCheckpoint(eager=True)
         new_meta = self._counted_meta(frontier)
-        new_meta["pb_scheme"] = PB_SCHEME
         new_meta["bucket_scheme"] = dict(new_scheme)
         new_meta.pop("bloom", None)  # geometry changes → rebuild on demand
         self.catalog.commit(
@@ -1523,7 +1487,6 @@ class DrainLoop:
             meta=new_meta,
         )
         self._use_bucket_scheme(new_scheme)
-        self.buckets_stamped = True
 
     def compact_seen(self) -> None:
         """Physically reclaim TTL-expired seen rows (the Redis analogue is
@@ -1543,16 +1506,13 @@ class DrainLoop:
 
     # -- the loop ---------------------------------------------------------------
 
-    def frontier_size(self, meta: dict | None = None, known: int | None = None) -> int:
+    def frontier_size(self, meta: dict | None = None) -> int:
         """Frontier rows per the commit meta (the latest unless given) — an
-        over-count at worst, trued up by reconcile_frontier() — else
-        ``known``, else one count() (a legacy catalog without the field)."""
+        over-count at worst, trued up by reconcile_frontier(); 0 before the
+        catalog is seeded."""
         if meta is None:
             meta = self.catalog.latest()["meta"]
-        n = meta.get("frontier_size", known)
-        if n is None:
-            n = self.catalog.read("frontier", S.FRONTIER_SCHEMA).count()
-        return int(n)
+        return int(meta.get("frontier_size", 0))
 
     def drain(self, max_batches: int = 1000, progress=None) -> list[BatchStats]:
         """Iterate batches until the frontier is empty (termination = the

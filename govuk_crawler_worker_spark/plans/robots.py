@@ -10,8 +10,8 @@ config-only rules:
 * a DrainLoop constructed with ``fetch_robots=True`` and an HttpFetcher
   additionally keeps a catalog table
 
-      robots(host, scheme, prefixes, rules, crawl_delay, sitemaps,
-             fetched_batch)
+      robots(host, scheme, rules, crawl_delay, sitemaps, fetched_batch,
+             unreachable)
 
   fetched through the SAME opener contract as page GETs — one GET of
   ``<scheme>://<host>/robots.txt`` per host per TTL, executed inside
@@ -48,10 +48,7 @@ Parsing implements RFC 9309 group + rule semantics:
 
 Each stored rule is pre-translated to an anchored Java regex (``rx``) with
 its raw-pattern octet length (``n``) so the longest-match decision is a pure
-columnar ``filter``/``array_max`` over the claim rows.  The legacy
-``prefixes`` column (r5 schema: literal Disallow prefixes) is retained for
-read-compat — rows written by an older engine keep over-block enforcement
-via ``startswith`` until their TTL refresh rewrites them as rules.
+columnar ``filter``/``array_max`` over the claim rows.
 """
 
 from __future__ import annotations
@@ -65,16 +62,16 @@ from pyspark.sql import functions as F
 ROBOTS_BUCKETS = 64  # live robots.txt rules table, bucketed by host hash
 RULES_TYPE = "array<struct<rx:string,n:int,allow:boolean>>"
 _ROBOTS_BASE = (
-    "host string, scheme string, prefixes array<string>, "
-    f"rules {RULES_TYPE}, crawl_delay double, sitemaps array<string>, "
-    "fetched_batch long"
+    f"host string, scheme string, rules {RULES_TYPE}, crawl_delay double, "
+    "sitemaps array<string>, fetched_batch long"
 )
 #: stored table schema; ``unreachable`` marks a host whose verdict is the
 #: ASSUMED complete disallow of an unreachable first contact (no real rules
 #: behind it) — the pipeline requeues its blocked claims for a retry instead
 #: of dropping them, and re-fetches after a short window (ttl/8) instead of
 #: the full TTL (RFC 9309 §2.3.1.4 requires the disallow only WHILE
-#: unreachable).  Pre-r7 rows read as NULL → treated as ordinary rules.
+#: unreachable).  Leaves written before the column existed read it as NULL
+#: (the declared-schema read) → treated as ordinary rules.
 ROBOTS_SCHEMA = _ROBOTS_BASE + ", unreachable boolean"
 #: fetch output = base columns + the HTTP status (the unreachable-robots
 #: composition in live_robots derives ``unreachable`` from it)
@@ -146,32 +143,18 @@ def _winning_groups(
 def parse_robots_policy(
     text: str, agent: str = "govuk_crawler_worker_spark"
 ) -> tuple[list[tuple[str, bool]], float | None]:
-    """The rules and the ``Crawl-delay`` applying to ``agent``, from ONE
-    pass over ``text`` (see :func:`parse_robots`, :func:`parse_crawl_delay`)."""
+    """The ordered ``(pattern, allow)`` rules and the ``Crawl-delay`` seconds
+    (None when absent) applying to ``agent``, from ONE pass over ``text``.
+    The most specific matching user-agent group wins (all groups at that
+    specificity combine), falling back to ``*``; when several winning groups
+    declare a delay, the LARGEST (most polite) is used.  Deterministic,
+    pure."""
     groups = _winning_groups(text, agent)
     rules: list[tuple[str, bool]] = []
     for group_rules, _delay in groups:
         rules.extend(r for r in group_rules if r not in rules)
     delays = [d for _rules, d in groups if d is not None]
     return rules, (max(delays) if delays else None)
-
-
-def parse_robots(
-    text: str, agent: str = "govuk_crawler_worker_spark"
-) -> list[tuple[str, bool]]:
-    """Ordered ``(pattern, allow)`` rules applying to ``agent`` — the most
-    specific matching user-agent group wins (all groups at that specificity
-    combine), falling back to ``*``.  Deterministic, pure."""
-    return parse_robots_policy(text, agent)[0]
-
-
-def parse_crawl_delay(
-    text: str, agent: str = "govuk_crawler_worker_spark"
-) -> float | None:
-    """``Crawl-delay`` seconds applying to ``agent`` (None when absent).
-    Group selection is identical to the Disallow/Allow rules; when several
-    winning groups declare a delay, the LARGEST (most polite) is used."""
-    return parse_robots_policy(text, agent)[1]
 
 
 def parse_sitemaps(text: str) -> list[str]:
@@ -313,15 +296,15 @@ def fetch_robots_delta(
                     status = -1
                 out.append(
                     (
-                        row.host, row.scheme, None, rules, delay, sitemaps,
-                        batch, int(status),
+                        row.host, row.scheme, rules, delay, sitemaps, batch,
+                        int(status),
                     )
                 )
             yield pd.DataFrame(
                 out,
                 columns=[
-                    "host", "scheme", "prefixes", "rules", "crawl_delay",
-                    "sitemaps", "fetched_batch", "fstatus",
+                    "host", "scheme", "rules", "crawl_delay", "sitemaps",
+                    "fetched_batch", "fstatus",
                 ],
             )
 
@@ -351,13 +334,11 @@ def robots_unreachable_col():
     return (s < 200) | ((s >= 300) & (s < 400)) | (s >= 500)
 
 
-def robots_blocked_col(rules_col, legacy_prefixes_col=None, url_col: str = "url"):
+def robots_blocked_col(rules_col, url_col: str = "url"):
     """Columnar RFC 9309 §2.2.2 verdict: over the host's rules, the rule
     with the MOST raw-pattern octets that matches path[?query] decides;
     an allow/disallow tie goes to allow; no matching rule allows.  NULL
-    rules (host absent from the table) block nothing.  ``legacy_prefixes``
-    rows (pre-rules schema) keep their literal-prefix over-block semantics
-    until the TTL refresh rewrites them."""
+    rules (host absent from the table) block nothing."""
     path0 = F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")), F.lit("/"))
     path = F.when(path0 == "", F.lit("/")).otherwise(path0)
     q = F.parse_url(F.col(url_col), F.lit("QUERY"))
@@ -374,13 +355,7 @@ def robots_blocked_col(rules_col, legacy_prefixes_col=None, url_col: str = "url"
         matched = F.filter(rules, lambda r: flag(r) & F.regexp_like(target, r["rx"]))
         return F.coalesce(F.array_max(F.transform(matched, lambda r: r["n"])), F.lit(-1))
 
-    blocked = best(False) > best(True)
-    if legacy_prefixes_col is not None:
-        blocked = blocked | F.exists(
-            F.coalesce(legacy_prefixes_col, F.array().cast("array<string>")),
-            lambda p: path.startswith(p),
-        )
-    return blocked
+    return best(False) > best(True)
 
 
 def robots_bucket_of(df=None):
@@ -453,12 +428,12 @@ def live_robots(
     )
     rb_buckets = sorted(int(r["rb"]) for r in rb_info)
     if not rb_buckets:
-        return LiveRobots(robots_tbl.select("host", "prefixes", "rules", "unreachable"))
+        return LiveRobots(robots_tbl.select("host", "rules", "unreachable"))
     # RFC 9309 §2.3.1: a definitive 4xx is allow-all (absent file), but an
     # UNREACHABLE robots.txt (5xx / redirect / transport error) must not
-    # replace known rules with allow-all — carry the host's stored rules (and
-    # legacy prefixes) forward under the new fetched_batch (retry next TTL);
-    # with no stored row, assume complete disallow.
+    # replace known rules with allow-all — carry the host's stored rules
+    # forward under the new fetched_batch (retry next TTL); with no stored
+    # row, assume complete disallow.
     unreachable = robots_unreachable_col()
     # Unreachable rows are stamped with an EARLIER fetched_batch so the next
     # claim of the host retries the fetch after a short window (ttl/8)
@@ -468,7 +443,6 @@ def live_robots(
     retry_stamp = F.lit(b - ttl_batches + retry_batches).cast("long")
     old = robots_tbl.select(
         "host",
-        F.col("prefixes").alias("_op"),
         F.col("rules").alias("_or"),
         F.col("crawl_delay").alias("_od"),
         F.col("sitemaps").alias("_osm"),
@@ -481,9 +455,6 @@ def live_robots(
     robots_delta = raw_delta.join(old, "host", "left").select(
         "host",
         "scheme",
-        F.when(carried, F.col("_op"))
-        .otherwise(F.lit(None).cast("array<string>"))
-        .alias("prefixes"),
         F.when(carried, F.col("_or"))
         .when(unreachable, disallow_all)
         .otherwise(F.col("rules"))
@@ -530,7 +501,7 @@ def live_robots(
     lookup = (
         robots_tbl.join(robots_delta.select("host"), "host", "left_anti")
         .unionByName(robots_delta)
-        .select("host", "prefixes", "rules", "unreachable")
+        .select("host", "rules", "unreachable")
     )
     if not any(bool(r["sm"]) for r in rb_info):
         return LiveRobots(lookup, merges)

@@ -28,10 +28,9 @@ Scale notes (100 TB / 10^10-URL frontier):
   (write = O(delta), the Iceberg v2 MOR / LSM-tier analogue); reads fold
   chains with latest-wins per key (ordered by the spec's ``order`` column,
   commit id as tie-break), deletes travel as tombstone rows, and a bucket
-  whose chain exceeds ``mor_max_chain`` (default 16) is folded inline by
-  that same commit — read fan-in stays bounded without global pauses.
-  Compaction folds chains back to a single base.
-* plain ``replaces`` copy-on-write remains for small whole tables.
+  whose chain exceeds ``MOR_MAX_CHAIN`` (16) is folded inline by that same
+  commit — read fan-in stays bounded without global pauses.  Compaction
+  folds chains back to a single base.
 * the commit manifest is O(#tables × #buckets) JSON — no scaling concern.
 * readers are never blocked: a commit is a single ``os.rename`` of the
   manifest; concurrent readers see the previous snapshot (snapshot isolation,
@@ -150,8 +149,9 @@ class Catalog:
         if schema is not None:
             # caller-declared schema WINS over the stored record: this is
             # schema-evolution-on-read — leaves written before a column was
-            # added (e.g. the robots table's r5→r6 ``rules`` column) are
-            # null-filled to the current shape instead of failing the union
+            # added are null-filled (e.g. robots ``unreachable``) and columns
+            # since dropped are skipped (robots ``prefixes``), so old and new
+            # leaves read as one table instead of failing the union
             st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
         else:
             stored = manifest.get("schemas", {}).get(name)
@@ -220,7 +220,6 @@ class Catalog:
 
     def commit(
         self,
-        replaces: dict[str, DataFrame] | None = None,
         appends: dict[str, DataFrame] | None = None,
         merges: dict[str, dict] | None = None,
         meta: dict[str, Any] | None = None,
@@ -228,7 +227,6 @@ class Catalog:
         """Write new snapshot segments then publish them plus carried-forward
         pointers for untouched tables in ONE rename — all-or-nothing.
 
-        ``replaces`` rewrites a table (copy-on-write, small tables only);
         ``appends`` adds a segment to grow-only tables (fetched, dead,
         metrics); ``merges`` upserts/deletes into a hash-bucketed table,
         rewriting ONLY touched buckets (the Iceberg MERGE INTO analogue):
@@ -337,7 +335,6 @@ class Catalog:
             delta, key = spec["delta"], spec["key"]
             bucket_of = spec["bucket_of"]
             order = spec.get("order")
-            max_chain = int(spec.get("mor_max_chain", MOR_MAX_CHAIN))
             schema_json = json.dumps(delta.schema.jsonValue())
             rows = delta.withColumn(_TOMB, F.lit(False))
             deletes = spec.get("deletes")
@@ -354,7 +351,7 @@ class Catalog:
                 for b in touched
             }
             long_b = sorted(
-                b for b in touched if len(prev_chains[b]) + 1 > max_chain
+                b for b in touched if len(prev_chains[b]) + 1 > MOR_MAX_CHAIN
             )
             short_b = sorted(set(touched) - set(long_b))
             bcol = bucket_of(rows).cast("int")
@@ -409,11 +406,9 @@ class Catalog:
         # until the manifest rename below.
         from concurrent.futures import ThreadPoolExecutor
 
-        work = [("replace", k, df) for k, df in (replaces or {}).items()] + [
-            ("append", k, df) for k, df in (appends or {}).items()
-        ]
+        work = list((appends or {}).items())
         merge_work = list((merges or {}).items())
-        for _mode, name, df in work:
+        for name, df in work:
             schemas[name] = json.dumps(df.schema.jsonValue())
 
         # ONE job computes every merge table's touched-bucket set (tagged
@@ -450,8 +445,8 @@ class Catalog:
         def run(unit):
             kind, payload = unit
             if kind == "plain":
-                mode, name, df = payload
-                return kind, (mode, name, write(name, df))
+                name, df = payload
+                return kind, (name, write(name, df))
             name, spec = payload
             return kind, write_merge(name, spec, touched_by[name])
 
@@ -465,11 +460,8 @@ class Catalog:
         mor_registry: dict[str, dict] = dict(prev.get("mor", {}))
         for kind, res in results:
             if kind == "plain":
-                mode, name, rel = res
-                if mode == "replace":
-                    tables[name] = [rel]
-                else:
-                    tables.setdefault(name, []).append(rel)
+                name, rel = res
+                tables.setdefault(name, []).append(rel)
             else:
                 name, touched, schema_json, mor_res = res
                 schemas[name] = schema_json

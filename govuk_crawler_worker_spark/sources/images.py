@@ -14,9 +14,8 @@ self-contained and deterministic:
   ITU-T T.81 implementation: JFIF, 4:4:4, Annex K tables, standard Huffman
   coding).  Payloads encode at IJG quality 98 — measured ~43-44 dB PSNR on
   the structured test images, above the ≥40 dB validation gate — and the
-  bytes are standard JPEGs any decoder can read.  The earlier "QIM1" stub
-  remains readable for payloads written by pre-r6 catalogs
-  (``decode_image`` sniffs the magic).
+  bytes are standard JPEGs any decoder can read; any other bytes under
+  ``fmt = "jpeg"`` raise ``ValueError``.
 
 phash: 8×8 mean hash over a grayscale box-downsample → int64, the payload's
 ``phash`` column and the near-duplicate key for image dedup.
@@ -30,8 +29,6 @@ import zlib
 import numpy as np
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_QIM_MAGIC = b"QIM1"
-_QIM_STEP = 4  # quantization step → PSNR = 10*log10(255^2/(step^2/12)) ≈ 46.9 dB
 
 
 def _png_chunk(tag: bytes, data: bytes) -> bytes:
@@ -93,20 +90,12 @@ def encode_lossy(pixels: np.ndarray) -> bytes:
 
 
 def decode_lossy(data: bytes) -> np.ndarray:
-    """Lossy payload decode: real JPEG, plus the pre-r6 "QIM1" stub format
-    for payloads persisted by older catalogs."""
+    """Lossy payload decode: a real JPEG (SOI marker), else ValueError."""
     if data[:2] == b"\xff\xd8":
         from govuk_crawler_worker_spark.sources.jpeg import decode_jpeg
 
         return decode_jpeg(data)
-    if data.startswith(_QIM_MAGIC):
-        w, h, _step = struct.unpack(">IIB", data[4:13])
-        return (
-            np.frombuffer(zlib.decompress(data[13:]), dtype=np.uint8)
-            .reshape(h, w, 3)
-            .copy()
-        )
-    raise ValueError("not a JPEG or QIM1 payload")
+    raise ValueError("not a JPEG payload")
 
 
 def decode_image(data: bytes, fmt: str) -> np.ndarray:

@@ -6,23 +6,29 @@ docstrings promised O(1000)-bucket production catalogs.  These tests pin the
 r5 design:
 
 * constructor counts apply to NEW catalogs and are stamped into the seed
-  commit meta as ``bucket_scheme`` (the pb_scheme pattern);
+  commit meta as ``bucket_scheme``;
 * a drain at NON-DEFAULT counts (128/4/8) equals the simulator;
 * on resume the STORED stamp wins over a conflicting requested count
   (geometry is a physical property of the rows on disk);
 * migrate_buckets() rewrites both state tables to a new geometry in one
   atomic commit and restamps — pruning re-engages at the new counts;
-* an UNSTAMPED legacy catalog drops to full-scan reads (never a bucketed
-  seen read) and still matches the simulator;
+* a catalog in an older format (no geometry stamp or frontier counts in
+  its commit meta, robots rows without ``rules`` / ``unreachable``) is
+  refused by the DrainLoop constructor, naming the missing piece;
 * the drain's periodic compaction cadence fires and leaves results unchanged.
 """
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 
+import pytest
+
 from govuk_crawler_worker_spark.plans.pipeline import DrainLoop
+from govuk_crawler_worker_spark.plans.robots import RULES_TYPE, robots_bucket_of
 from govuk_crawler_worker_spark.plans.sim import simulate
+from govuk_crawler_worker_spark.sources import catalog as catalog_module
 from govuk_crawler_worker_spark.sources.catalog import Catalog
 from govuk_crawler_worker_spark.sources.world import build_world, world_to_spark
 
@@ -79,8 +85,6 @@ class TestBucketSchemeParam:
             bloom_min_batch=0, seen_buckets=64,
         )
         assert loop2.seen_buckets == 16
-        assert loop2.bucket_scheme_mismatch
-        assert loop2.buckets_stamped
         loop2.drain(max_batches=60)
         sim = simulate(world.content, world.seeds, world.config)
         assert _fetched_key(catalog.read("fetched").collect()) == _fetched_key(sim.fetched)
@@ -96,9 +100,9 @@ class TestBucketSchemeParam:
             spark, catalog, world.config, content2.cache(), payload2.cache(),
             bloom_min_batch=0, seen_buckets=64, frontier_host_buckets=2,
         )
-        assert loop2.bucket_scheme_mismatch  # stored 32/8 won at init
+        assert loop2.seen_buckets == 32  # stored 32/8 won at init
         loop2.migrate_buckets()  # adopt the REQUESTED counts, O(table) once
-        assert not loop2.bucket_scheme_mismatch
+        assert (loop2.seen_buckets, loop2.frontier_host_buckets) == (64, 2)
         meta = catalog.latest()["meta"]
         assert meta["bucket_scheme"]["seen"] == 64
         assert meta["bucket_scheme"]["frontier_host"] == 2
@@ -110,42 +114,56 @@ class TestBucketSchemeParam:
         sim = simulate(world.content, world.seeds, world.config)
         assert _fetched_key(catalog.read("fetched").collect()) == _fetched_key(sim.fetched)
 
-    def test_legacy_unstamped_catalog_falls_back_to_full_scan(self, spark):
+
+class TestCatalogFormatCheck:
+    """The one place that decides which catalogs this engine reads: the
+    DrainLoop constructor refuses an older format, naming what is missing,
+    instead of draining it on a fallback path."""
+
+    @pytest.fixture(scope="class")
+    def drained(self, spark):
         world, catalog, loop, seeds = _drain_world(
-            spark, seed=17, prefix="bktleg_", bloom_min_batch=0
+            spark, seed=17, prefix="fmtchk_", bloom_min_batch=0
         )
         loop.seed(seeds)
-        loop.drain(max_batches=2)
-        # simulate a pre-r5 catalog: strip the stamp from the commit meta
-        meta = dict(catalog.latest()["meta"])
-        meta.pop("bucket_scheme", None)
-        catalog.commit(meta=meta)
+        loop.drain(max_batches=2)  # partial: seen + frontier state on disk
+        return world, catalog.root
 
-        payload2, content2, _ = world_to_spark(spark, world)
-        loop2 = DrainLoop(
-            spark, catalog, world.config, content2.cache(), payload2.cache(),
-            bloom_min_batch=0,
-        )
-        assert not loop2.buckets_stamped
-        # every seen read must be the always-correct full scan: with MOR
-        # writes engaged (bloom_min_batch=0) nothing else calls
-        # read_buckets("seen"), so a single bucketed call is a guard breach
-        seen_bucket_reads = []
-        orig_rb = catalog.read_buckets
+    @pytest.mark.parametrize(
+        "piece",
+        ["bucket_scheme", "frontier_size", "frontier_pb_counts", "rules", "unreachable"],
+    )
+    def test_refuses_pre_r7_catalog(self, spark, drained, piece):
+        world, root = drained
+        copy = tempfile.mkdtemp(prefix="fmtchk_copy_")
+        shutil.copytree(root, copy, dirs_exist_ok=True)
+        catalog = Catalog(spark, copy)
+        payload, content, _ = world_to_spark(spark, world)
 
-        def spy(name, buckets, schema=None):
-            if name == "seen":
-                seen_bucket_reads.append(sorted(buckets))
-            return orig_rb(name, buckets, schema)
+        def loop():
+            return DrainLoop(spark, catalog, world.config, content, payload)
 
-        catalog.read_buckets = spy
-        try:
-            loop2.drain(max_batches=60)
-        finally:
-            catalog.read_buckets = orig_rb
-        assert seen_bucket_reads == []
-        sim = simulate(world.content, world.seeds, world.config)
-        assert _fetched_key(catalog.read("fetched").collect()) == _fetched_key(sim.fetched)
+        loop()  # the catalog as written is accepted
+        if piece in ("rules", "unreachable"):
+            # a robots leaf in an older schema: r5 had literal prefixes and
+            # no rules, r6 had rules but no unreachable flag
+            cols = "host string, scheme string, prefixes array<string>"
+            row = ("www.gov.uk", "https", ["/old"])
+            if piece == "unreachable":
+                cols += f", rules {RULES_TYPE}"
+                row += ([{"rx": "^/old", "n": 4, "allow": False}],)
+            leaf = spark.createDataFrame([row + (0,)], cols + ", fetched_batch long")
+            catalog.commit(
+                merges={
+                    "robots": dict(delta=leaf, key="host", bucket_of=robots_bucket_of)
+                }
+            )
+        else:
+            meta = dict(catalog.latest()["meta"])
+            meta.pop(piece)
+            catalog.commit(meta=meta)
+        with pytest.raises(ValueError, match=piece):
+            loop()
 
 
 class TestCompactionCadence:
@@ -176,20 +194,19 @@ class TestCompactionCadence:
 
 
 class TestMorMaxChainKnob:
-    def test_drain_forwards_chain_cap_and_results_unchanged(self, spark):
-        """r4 VERDICT #8: mor_max_chain is the read-fold-cost vs
-        write-amplification knob.  The DrainLoop ctor value must reach the
-        catalog merge spec — a drain at cap=2 (compaction off so chains only
-        shrink via inline folds) ends with every state chain ≤ 2 leaves,
-        at least one chain having actually hit the cap, and sim-equal
-        results."""
+    def test_drain_forwards_chain_cap_and_results_unchanged(self, spark, monkeypatch):
+        """r4 VERDICT #8: MOR_MAX_CHAIN is the read-fold-cost vs
+        write-amplification trade-off.  The catalog's cap must govern the
+        drain's state tables — a drain at cap=2 (compaction off so chains
+        only shrink via inline folds) ends with every state chain ≤ 2
+        leaves, at least one chain having actually hit the cap, and
+        sim-equal results."""
+        monkeypatch.setattr(catalog_module, "MOR_MAX_CHAIN", 2)
         world, catalog, loop, seeds = _drain_world(
             spark, seed=29, prefix="morcap_",
             bloom_min_batch=0,   # MOR state tables from batch 0
             compact_batches=0,   # no cadence folds — the cap does the work
-            mor_max_chain=2,
         )
-        assert loop.mor_max_chain == 2
         loop.seed(seeds)
         loop.drain(max_batches=60)
         parts = catalog.latest()["parts"]
@@ -199,7 +216,7 @@ class TestMorMaxChainKnob:
             for c in parts.get(t, {}).values()
         ]
         assert lens and max(lens) <= 2, f"chain cap 2 violated: {max(lens)}"
-        assert 2 in lens, "cap never exercised — knob likely not forwarded"
+        assert 2 in lens, "cap never exercised"
         sim = simulate(world.content, world.seeds, world.config)
         assert _fetched_key(catalog.read("fetched").collect()) == _fetched_key(sim.fetched)
 

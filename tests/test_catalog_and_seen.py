@@ -18,6 +18,7 @@ from govuk_crawler_worker_spark.operators.seen import (
     seen_merge,
 )
 from govuk_crawler_worker_spark.plans import schemas as S
+from govuk_crawler_worker_spark.sources import catalog as catalog_module
 from govuk_crawler_worker_spark.sources.catalog import Catalog
 
 
@@ -25,7 +26,7 @@ class TestCatalog:
     def test_commit_replace_append_and_carry_forward(self, spark):
         cat = Catalog(spark, tempfile.mkdtemp(prefix="cat_"))
         a = spark.range(5).withColumnRenamed("id", "x")
-        cat.commit(replaces={"t": a})
+        cat.commit(appends={"t": a})
         cat.commit(appends={"log": spark.range(3).withColumnRenamed("id", "x")})
         # t carried forward, log appended twice
         cat.commit(appends={"log": spark.range(2).withColumnRenamed("id", "x")})
@@ -41,16 +42,17 @@ class TestCatalog:
 
     def test_snapshot_isolation(self, spark):
         cat = Catalog(spark, tempfile.mkdtemp(prefix="cat_"))
-        cat.commit(replaces={"t": spark.range(5).withColumnRenamed("id", "x")})
+        cat.commit(appends={"t": spark.range(5).withColumnRenamed("id", "x")})
         old = cat.read("t")
-        cat.commit(replaces={"t": spark.range(99).withColumnRenamed("id", "x")})
+        cat.commit(appends={"t": spark.range(5, 99).withColumnRenamed("id", "x")})
         assert old.count() == 5  # reader pinned to its snapshot
         assert cat.read("t").count() == 99
 
     def test_expire_snapshots_keeps_live(self, spark):
         cat = Catalog(spark, tempfile.mkdtemp(prefix="cat_"))
         for i in range(5):
-            cat.commit(replaces={"t": spark.range(i + 1).withColumnRenamed("id", "x")})
+            cat.commit(appends={"t": spark.range(i, i + 1).withColumnRenamed("id", "x")})
+        # every segment is still live in the latest manifest: none expires
         cat.expire_snapshots(keep_last=2)
         assert cat.read("t").count() == 5
 
@@ -264,7 +266,8 @@ class TestMergeOnRead:
         cat.commit(merges={"t": dict(delta=mk([(2, "B2")]), key="k", bucket_of=bucket_of, mor=True)})
         assert (2, "B2") in {(r.k, r.v) for r in cat.read("t").collect()}
 
-    def test_chain_cap_inline_fold_and_compaction(self, spark):
+    def test_chain_cap_inline_fold_and_compaction(self, spark, monkeypatch):
+        monkeypatch.setattr(catalog_module, "MOR_MAX_CHAIN", 2)
         cat, bucket_of, mk = self._cat(spark)
         cat.commit(merges={"t": dict(delta=mk([(1, "a"), (5, "c")]), key="k", bucket_of=bucket_of)})
         for i in range(5):
@@ -272,7 +275,7 @@ class TestMergeOnRead:
                 merges={
                     "t": dict(
                         delta=mk([(1, f"v{i}")]), key="k", bucket_of=bucket_of,
-                        mor=True, mor_max_chain=2,
+                        mor=True,
                     )
                 }
             )
@@ -290,7 +293,7 @@ class TestMergeOnRead:
         cat.expire_snapshots(keep_last=1)
         assert sorted((r.k, r.v) for r in cat.read("t").collect()) == rows
 
-    def test_inline_fold_stamps_live_delta_seq(self, spark):
+    def test_inline_fold_stamps_live_delta_seq(self, spark, monkeypatch):
         """A MOR delta whose LINEAGE still scans catalog parquet must not
         inherit the scanned file's older commit seq during an inline chain
         fold (r5 fix, r4 ADVICE): pre-fix, input_file_name() stamped such
@@ -299,11 +302,12 @@ class TestMergeOnRead:
 
         from pyspark.sql import functions as F
 
+        monkeypatch.setattr(catalog_module, "MOR_MAX_CHAIN", 2)
         cat, bucket_of, mk = self._cat(spark)
         cat.commit(merges={"t": dict(delta=mk([(1, "a")]), key="k", bucket_of=bucket_of)})
         cat.commit(
             merges={"t": dict(delta=mk([(1, "b")]), key="k", bucket_of=bucket_of,
-                              mor=True, mor_max_chain=2)}
+                              mor=True)}
         )
         # un-checkpointed delta derived from the BASE snapshot's files:
         # input_file_name() on its rows still says snap-00000000
@@ -314,7 +318,7 @@ class TestMergeOnRead:
         # delta must win over the seq-1 chain row despite its stale lineage
         cat.commit(
             merges={"t": dict(delta=stale_lineage, key="k", bucket_of=bucket_of,
-                              mor=True, mor_max_chain=2)}
+                              mor=True)}
         )
         assert [(r.k, r.v) for r in cat.read("t").collect()] == [(1, "A")]
 
@@ -394,7 +398,7 @@ class TestCrashAtomicity:
 
         root = tf.mkdtemp(prefix="catx_")
         cat = Catalog(spark, root)
-        cat.commit(replaces={"t": spark.range(5).withColumnRenamed("id", "x")})
+        cat.commit(appends={"t": spark.range(5).withColumnRenamed("id", "x")})
 
         # simulate the torn commit: orphan snapshot dir + .tmp manifest
         orphan = os.path.join(root, "tables", "t", "snap-99999999")
@@ -414,7 +418,7 @@ class TestBloomLifecycle:
     """Segmented-bloom maintenance: delta-fold-at-commit keeps the stored
     table authoritative (probe reads it directly, zero seen scans); full
     rebuild (with larger sizing) once the seen set outgrows capacity, or
-    when a legacy watermark trails the batch clock."""
+    when the watermark trails the batch clock."""
 
     def _loop(self, spark, tmpdir):
         from govuk_crawler_worker_spark.config import CrawlConfig
@@ -471,8 +475,9 @@ class TestBloomLifecycle:
             r["segment"] for r in view1.collect()
         }
 
-        # a TRAILING watermark (legacy catalog: rows committed in [wm, b)
-        # were never folded) must force a rebuild — probing the stale
+        # a TRAILING watermark (bloom_min_seen raised then lowered between
+        # runs: rows committed in [wm, b) were never folded) must force a
+        # rebuild — probing the stale
         # filter could yield false negatives
         view2b, rows2b, _meta2b, rb2b = loop._bloom_for_batch(5, cat.latest()["meta"])
         assert rb2b

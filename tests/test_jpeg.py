@@ -232,15 +232,16 @@ class TestLegacyAndDispatch:
         px = img.make_pixels(np.random.default_rng(9), 12, 12)
         assert img.encode_lossy(px)[:2] == b"\xff\xd8"
 
-    def test_qim1_legacy_payloads_still_decode(self):
-        import struct as st
+    def test_qim1_payloads_are_refused(self):
+        """The pre-r6 "QIM1" stub is not a JPEG: decoding it fails loudly."""
         import zlib
 
         px = img.make_pixels(np.random.default_rng(10), 10, 6)
-        q = (px.astype(np.int32) // 4 * 4 + 2).clip(0, 255).astype(np.uint8)
-        legacy = b"QIM1" + st.pack(">IIB", 10, 6, 4) + zlib.compress(q.tobytes(), 6)
-        assert np.array_equal(img.decode_lossy(legacy), q)
-        assert img.psnr(px, img.decode_image(legacy, "jpeg")) >= 40.0
+        stub = b"QIM1" + struct.pack(">IIB", 10, 6, 4) + zlib.compress(px.tobytes(), 6)
+        with pytest.raises(ValueError, match="not a JPEG"):
+            img.decode_lossy(stub)
+        with pytest.raises(ValueError, match="not a JPEG"):
+            img.decode_image(stub, "jpeg")
 
 
 class TestCodecProperty:

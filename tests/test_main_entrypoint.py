@@ -68,10 +68,10 @@ def test_maintain_rejects_unknown_command(spark):
 def test_cli_migration_on_legacy_catalog_then_pruned_drain(spark, monkeypatch):
     """r5 VERDICT #5/#6: the deployable entrypoint can now run the migration
     its env knobs imply, and BLOOM_MIN_SEEN reaches the strategy switch.
-    Flow: partial drain → strip the geometry stamp (pre-r5 catalog) →
-    `migrate-buckets` via the CLI veneer at SEEN_BUCKETS=64 → the resumed
-    drain issues bucketed (pruned) seen reads at the NEW geometry and the
-    final crawl equals a fresh single-run control."""
+    Flow: partial drain (stamped at 32 seen buckets) → `migrate-buckets` via
+    the CLI veneer at SEEN_BUCKETS=64 → the resumed drain issues bucketed
+    (pruned) seen reads at the NEW geometry and the final crawl equals a
+    fresh single-run control."""
     world = build_world(n_pages=16, seed=13)
     content = H._statelessize(world.content)
     srv, base = H._serve(content)
@@ -92,10 +92,7 @@ def test_cli_migration_on_legacy_catalog_then_pruned_drain(spark, monkeypatch):
 
         main(env=env, spark=spark, opener=op)  # partial drain, default stamp
         cat = Catalog(spark, ckpt)
-        meta = dict(cat.latest()["meta"])
-        assert meta["bucket_scheme"]["seen"] == 32
-        meta.pop("bucket_scheme")  # simulate a pre-r5 catalog
-        cat.commit(meta=meta)
+        assert cat.latest()["meta"]["bucket_scheme"]["seen"] == 32
 
         # operator-side migration: same env the drain uses + the new count
         migrated = maintain(
@@ -107,7 +104,7 @@ def test_cli_migration_on_legacy_catalog_then_pruned_drain(spark, monkeypatch):
         assert seen_parts and max(int(b) for b in seen_parts) < 64
 
         # the resumed drain (entrypoint, same env) must use PRUNED seen
-        # reads at the migrated geometry — the migration re-engaged them
+        # reads at the migrated geometry
         calls: list[list[int]] = []
         orig_rb = Catalog.read_buckets
 

@@ -24,8 +24,6 @@ ALLOWED = {
     "xxhash64_of_string_sql": "SQL reference twin of Spark's xxhash64 for the oracles",
     "resample_linear": "fixture builder for audio test inputs",
     "encode_video": "fixture builder for video test inputs",
-    "parse_robots": "rules half of parse_robots_policy; the RFC 9309 goldens pin it",
-    "parse_crawl_delay": "delay half of parse_robots_policy; the robots goldens pin it",
 }
 
 

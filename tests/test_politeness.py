@@ -127,13 +127,13 @@ def test_live_crawl_delay_spaces_the_schedule(spark, tmp_path):
 
 class TestRobotsParser:
     """User-agent group selection of the one robots.txt parser
-    (``plans.robots.parse_robots``)."""
+    (``plans.robots.parse_robots_policy``)."""
 
     @staticmethod
     def _dis(txt, agent):
-        from govuk_crawler_worker_spark.plans.robots import parse_robots
+        from govuk_crawler_worker_spark.plans.robots import parse_robots_policy
 
-        return tuple(p for p, allow in parse_robots(txt, agent) if not allow)
+        return tuple(p for p, allow in parse_robots_policy(txt, agent)[0] if not allow)
 
     def test_groups_and_agent_specificity(self):
         txt = """

@@ -1,6 +1,6 @@
 """Live robots.txt fetch + enforcement (r5/r6, beyond-reference surface).
 
-parse_robots: RFC 9309 — group selection, Allow AND Disallow rules, ``*``
+parse_robots_policy: RFC 9309 — group selection, Allow AND Disallow rules, ``*``
 and trailing-``$`` wildcards, longest-match precedence (allow wins ties).
 E2E: a DrainLoop with HttpFetcher against a real local HTTP server serving
 robots rules — the engine must GET /robots.txt ONCE per host per TTL, commit
@@ -17,8 +17,7 @@ from collections import defaultdict
 from govuk_crawler_worker_spark.config import CrawlConfig
 from govuk_crawler_worker_spark.plans.pipeline import DrainLoop
 from govuk_crawler_worker_spark.plans.robots import (
-    parse_crawl_delay,
-    parse_robots,
+    parse_robots_policy,
     rule_regex,
     rules_to_structs,
 )
@@ -27,13 +26,13 @@ from govuk_crawler_worker_spark.sources.catalog import Catalog
 
 def _dis(txt, agent="govuk_crawler_worker_spark"):
     """Disallow patterns only — the r5 test surface, kept for goldens."""
-    return [p for p, allow in parse_robots(txt, agent) if not allow]
+    return [p for p, allow in parse_robots_policy(txt, agent)[0] if not allow]
 
 
 class TestParseRobots:
     def test_star_group(self):
         txt = "User-agent: *\nDisallow: /private\nDisallow: /tmp\n"
-        assert parse_robots(txt) == [("/private", False), ("/tmp", False)]
+        assert parse_robots_policy(txt)[0] == [("/private", False), ("/tmp", False)]
 
     def test_specific_agent_wins_over_star(self):
         txt = (
@@ -49,11 +48,11 @@ class TestParseRobots:
             "Disallow: /x # trailing\nAllow: /x/ok\n"
         )
         # Allow is now a first-class rule (RFC 9309 §2.2.2)
-        assert parse_robots(txt) == [("/x", False), ("/x/ok", True)]
+        assert parse_robots_policy(txt)[0] == [("/x", False), ("/x/ok", True)]
 
     def test_empty_disallow_is_allow_all(self):
-        assert parse_robots("User-agent: *\nDisallow:\n") == []
-        assert parse_robots("") == []
+        assert parse_robots_policy("User-agent: *\nDisallow:\n")[0] == []
+        assert parse_robots_policy("")[0] == []
 
     def test_longest_agent_match_wins(self):
         txt = (
@@ -73,7 +72,7 @@ class TestRuleRegexAndPrecedence:
         import re
 
         best_d, best_a = -1, -1
-        for r in rules_to_structs(parse_robots(txt, agent)):
+        for r in rules_to_structs(parse_robots_policy(txt, agent)[0]):
             if re.search(r["rx"], target):
                 if r["allow"]:
                     best_a = max(best_a, r["n"])
@@ -325,50 +324,6 @@ class TestRobotsFetchDrain:
         }
         assert rules == {host: [("^/", False)]}
 
-    def test_legacy_prefixes_rows_still_enforce(self, spark):
-        """Read-compat with the r5 robots schema (literal Disallow prefixes,
-        no ``rules`` column): a stored legacy row keeps its over-block
-        enforcement — without being refetched — until its TTL lapses."""
-        import tempfile as _tf
-
-        from pyspark.sql import functions as F
-
-        from govuk_crawler_worker_spark.plans.robots import ROBOTS_BUCKETS
-
-        host = "www.gov.uk"
-        html = "text/html; charset=utf-8"
-        pages = {
-            f"/{host}/": (200, html, b'<a href="/a">a</a><a href="/old/x">o</a>'),
-            f"/{host}/a": (200, html, b"<p>ok</p>"),
-            f"/{host}/old/x": (200, html, b"<p>legacy-blocked</p>"),
-            f"/{host}/robots.txt": (200, "text/plain", b"User-agent: *\nDisallow:\n"),
-        }
-        catalog = Catalog(spark, _tf.mkdtemp(prefix="robots_legacy_"))
-        legacy = spark.createDataFrame(
-            [(host, "https", ["/old"], 0)],
-            "host string, scheme string, prefixes array<string>, fetched_batch long",
-        )
-        catalog.commit(
-            merges={
-                "robots": dict(
-                    delta=legacy,
-                    key="host",
-                    bucket_of=lambda df: F.pmod(
-                        F.xxhash64(F.col("host")), F.lit(ROBOTS_BUCKETS)
-                    ),
-                )
-            }
-        )
-        cfg = CrawlConfig(root_urls=(f"https://{host}/",))
-        catalog, counts = _run_drain(spark, pages, cfg, catalog=catalog)
-        fetched = {r["url"] for r in catalog.read("fetched").collect()}
-        assert f"https://{host}/a" in fetched
-        assert f"https://{host}/old/x" not in fetched
-        assert counts[f"/{host}/old/x"] == 0
-        # the legacy row is FRESH (default 24h TTL) → never refetched; the
-        # enforcement above therefore came from the prefixes column alone
-        assert counts[f"/{host}/robots.txt"] == 0
-
     def test_unreachable_robots_404_is_allow_all_and_static_rules_still_apply(
         self, spark
     ):
@@ -439,7 +394,7 @@ class TestParseRobotsEdgeCases:
         assert _dis(txt) == ["/ok"]
 
     def test_empty_allow_ignored(self):
-        assert parse_robots("User-agent: *\nAllow:\nDisallow: /x\n") == [
+        assert parse_robots_policy("User-agent: *\nAllow:\nDisallow: /x\n")[0] == [
             ("/x", False)
         ]
 
@@ -450,13 +405,13 @@ class TestParseCrawlDelay:
             "User-agent: *\nCrawl-delay: 5\nDisallow: /x\n\n"
             "User-agent: govuk_crawler\nCrawl-delay: 9\n"
         )
-        assert parse_crawl_delay(txt) == 9.0  # specific group wins
-        assert parse_crawl_delay(txt, agent="otherbot") == 5.0
+        assert parse_robots_policy(txt)[1] == 9.0  # specific group wins
+        assert parse_robots_policy(txt, agent="otherbot")[1] == 5.0
 
     def test_absent_and_invalid(self):
-        assert parse_crawl_delay("User-agent: *\nDisallow: /x\n") is None
-        assert parse_crawl_delay("User-agent: *\nCrawl-delay: soon\n") is None
-        assert parse_crawl_delay("User-agent: *\nCrawl-delay: -3\n") is None
+        assert parse_robots_policy("User-agent: *\nDisallow: /x\n")[1] is None
+        assert parse_robots_policy("User-agent: *\nCrawl-delay: soon\n")[1] is None
+        assert parse_robots_policy("User-agent: *\nCrawl-delay: -3\n")[1] is None
 
     def test_combining_groups_take_max(self):
         txt = (
@@ -464,11 +419,11 @@ class TestParseCrawlDelay:
             "User-agent: *\nCrawl-delay: 7\nDisallow: /y\n"
         )
         # same-specificity groups combine; the most polite delay wins
-        assert parse_crawl_delay(txt) == 7.0
+        assert parse_robots_policy(txt)[1] == 7.0
 
     def test_delay_does_not_leak_rules(self):
         txt = "User-agent: *\nCrawl-delay: 4\nDisallow: /q\n"
-        assert parse_robots(txt) == [("/q", False)]
+        assert parse_robots_policy(txt)[0] == [("/q", False)]
 
 
 class TestFetchRobotsParsesOnce:
